@@ -37,11 +37,13 @@ public final class VectorGemm {
     * The species lives in a LOCAL, not a static field: sbt/zinc's
     * incremental-compile analysis reflectively loads this class and
     * resolves the types of its declared members — a VectorSpecies field
-    * makes a clean build die with an IllegalAccessError in the sbt JVM
-    * (which runs without the incubator module). Method bodies are never
-    * resolved by that analysis, and the JIT constant-folds
-    * SPECIES_PREFERRED after inlining, so the local costs nothing
-    * (measured identical GFLOPS). */
+    * makes a clean build die with an IllegalAccessError in any sbt JVM
+    * started without the incubator module. The repo's .jvmopts adds the
+    * module for the standard sbt launcher, but launchers that ignore
+    * .jvmopts (CI wrappers, IDE-embedded sbt, BSP servers) still hit it, so
+    * the local stays. Method bodies are never resolved by that analysis, and
+    * the JIT constant-folds SPECIES_PREFERRED after inlining, so the local
+    * costs nothing (measured identical GFLOPS). */
   public static float[] gemm(float[] a, int n, int k, float[] b, int m) {
     float[] c = new float[n * m];
     final VectorSpecies<Float> S = FloatVector.SPECIES_PREFERRED;
@@ -56,6 +58,9 @@ public final class VectorGemm {
         int j = 0;
         for (; j + L <= m; j += L) {
           FloatVector acc = FloatVector.fromArray(S, c, co + j);
+          // lanes multiply b*a where the scalar loop does a*b: the same bits
+          // for non-NaN inputs, so bit-identity assumes no NaN (with one,
+          // which NaN payload propagates can depend on operand order)
           FloatVector s = FloatVector.fromArray(S, b, b0 + j).mul(a0)
               .add(FloatVector.fromArray(S, b, b1 + j).mul(a1))
               .add(FloatVector.fromArray(S, b, b2 + j).mul(a2))

@@ -176,16 +176,20 @@ object BenchExtra {
         graft.util.CacheRegistry.releaseAll()
         (sec, acc.snapshot, acc.topStages(6))
       }
-      // warm once, then report the median-ish second run of each action
-      val runs = Seq.fill(2)(timed(_.count()))
-      if (sampling) { sampler.reset(); sampler.on = true }
-      val sampled = timed(_.count())
-      if (sampling) sampler.on = false
+      // median of three unprofiled count runs; with sampling on, one more
+      // run carries the profiler (its safepoint pauses stay out of the median)
+      val runs = Seq.fill(3)(timed(_.count()))
+      val sampled =
+        if (!sampling) runs.last
+        else {
+          sampler.reset(); sampler.on = true
+          try timed(_.count()) finally sampler.on = false
+        }
       val noop = timed(
         _.write.format("noop").mode("overwrite").save())
-      val all = runs :+ sampled
-      val med = all.map(_._1).sorted.apply(1)
-      println(f"QUERY $name%-28s count_med=$med%7.3f  runs=${all.map(r => f"${r._1}%.3f").mkString(",")}  noop=${noop._1}%7.3f")
+      val med = runs.map(_._1).sorted.apply(1)
+      val sampledSec = if (sampling) f"  sampled=${sampled._1}%.3f" else ""
+      println(f"QUERY $name%-28s count_med=$med%7.3f  runs=${runs.map(r => f"${r._1}%.3f").mkString(",")}$sampledSec  noop=${noop._1}%7.3f")
       println(s"  last_count_profile: ${sampled._2}")
       println(s"  top stages (last count run):\n${sampled._3}")
       if (sampling) println(s"  sampled frames (last count run):\n${sampler.top(12)}")
