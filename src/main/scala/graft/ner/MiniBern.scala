@@ -37,7 +37,11 @@ import graft.ner.TokenClassifier.{ModelSession, Piece}
   *      after the full QKᵀ scores — FLOP-identical to frame-wide attention).
   *      This makes each word's representation a pure function of the word,
   *      so model behavior is exactly pinnable by fixtures (MiniBernSpec +
-  *      the tinybern-style golden TSV) with zero cross-context drift.
+  *      the tinybern-style golden TSV) with zero cross-context drift. The
+  *      word-run memo of [[MiniBern.predict]] depends on it: a piece's
+  *      logits are a function of its word's piece run in the frame alone,
+  *      so each distinct run is encoded once per session. A model with
+  *      frame-wide attention must not keep the memo.
   *   2. **The head is a prototype classifier**: the trunk is run once at
   *      construction over each vocabulary word; the L2-normalized outputs
   *      become per-label prototype rows P, and head logits are
@@ -71,6 +75,14 @@ object MiniBern {
       // [[Int8Quantizer]] for the scheme + the honest perf story.
       int8: Boolean = false
   )
+
+  /** Word runs the memo of [[MiniBern.predict]] holds before it is cleared.
+    * `WordMemoProbe` (BENCH.md "4-core baseline") picked it: on Zipf(1.0)
+    * text over 50,000 words, 4,000 docs held 31k runs (5.2 MB) at a hit
+    * ratio of 0.86, where 2^14 runs gave 0.78 and 2^18 no more than 2^16.
+    * An entry takes at most about 670 bytes (16 pieces of 6 non-Latin-1
+    * chars: key, logits, map node), so a session's memo stays under 45 MB. */
+  val MemoRuns: Int = 1 << 16
 
   /** FLOPs of one frame forward pass (multiply+add = 2 FLOPs), for BENCH. */
   def flops(nPieces: Int, cfg: Config = Config()): Long = {
@@ -108,12 +120,17 @@ object MiniBern {
   }
 }
 
-final class MiniBern(
+final class MiniBern private[graft] (
     vocab: Map[String, String],
-    cfg: MiniBern.Config = MiniBern.Config()
+    cfg: MiniBern.Config,
+    memoRuns: Int
 ) extends ModelSession {
   import MiniBern._
   import TokenClassifier.Labels
+
+  def this(vocab: Map[String, String], cfg: MiniBern.Config = MiniBern.Config()) =
+    this(vocab, cfg, MiniBern.MemoRuns)
+  require(memoRuns > 0, s"memoRuns=$memoRuns")
 
   // quantization is part of the model identity: anything keyed by version
   // (pipeline metadata, broadcast memos) must not mix float and int8 outputs
@@ -472,7 +489,121 @@ final class MiniBern(
     l2norm(out)
   }
 
+  // ---- word-run memo -----------------------------------------------------
+  // Logits of a word run, flat [pieces × labels], keyed by [[runKey]]. Its
+  // own per session: the float and int8 sessions never share entries.
+  private val runMemo = new java.util.concurrent.ConcurrentHashMap[String, Array[Float]]()
+  private val memoHits = new java.util.concurrent.atomic.LongAdder
+  private val memoMisses = new java.util.concurrent.atomic.LongAdder
+
+  /** (runs served from the memo, runs not served from it, runs held). */
+  private[graft] def memoStats: (Long, Long, Int) =
+    (memoHits.sum, memoMisses.sum, runMemo.size)
+  /** A snapshot of the memo's entries, for footprint measurements. */
+  private[graft] def memoEntries: Seq[(String, Array[Float])] = {
+    import scala.jdk.CollectionConverters._
+    runMemo.entrySet.asScala.toSeq.map(e => (e.getKey, e.getValue))
+  }
+
+  /** The piece tokens of `frame[from, until)`, each prefixed by its length
+    * as two chars, so distinct token sequences never share a key. The
+    * tokens keep the `##` continuation marker, so a run cut at the frame's
+    * left edge (`##ow`) never shares a key with the word `ow`. */
+  private def runKey(frame: IndexedSeq[Piece], from: Int, until: Int): String = {
+    val sb = new java.lang.StringBuilder
+    var i = from
+    while (i < until) {
+      val t = frame(i).token
+      sb.append((t.length >>> 16).toChar).append(t.length.toChar).append(t)
+      i += 1
+    }
+    sb.toString
+  }
+
+  /** Logits for a batch of frames (windows of [[TokenClassifier.wordpieces]],
+    * in which a word's pieces are consecutive and word ids increase).
+    *
+    * Every op of the forward pass works row by row except attention, which
+    * is word-local (divergence 1), so a piece's logits depend only on its
+    * word run: the maximal run of pieces with its word id in the frame.
+    * Each run is looked up in a per-session memo. A hit copies the cached
+    * logits. The misses of one call go through ONE batched [[forward]],
+    * each distinct run as its own frame, and are stored. The result is
+    * bit-identical to `forward(frames)`: GEMM rows (vector and scalar),
+    * layer norms and the int8 activation scales are all per row, and the
+    * attention of a run sees the same keys in the same order.
+    *
+    * The memo is bounded: at [[MiniBern.MemoRuns]] runs it is cleared, and
+    * runs longer than `cfg.maxWordPieces` pieces (words over 64 chars:
+    * URLs, hashes) are computed but never stored, which caps an entry near
+    * 670 bytes. A clear by another thread is harmless: a hit keeps the array
+    * it read, and misses are filled from this call's own forward pass. */
   def predict(frames: Seq[IndexedSeq[Piece]]): Array[Array[Array[Float]]] = {
+    val nl = Labels.size
+    val out = frames.iterator.map(f => new Array[Array[Float]](f.length)).toArray
+    def fill(fi: Int, from: Int, until: Int, logits: Array[Float]): Unit = {
+      var i = from
+      while (i < until) {
+        out(fi)(i) = java.util.Arrays.copyOfRange(logits, (i - from) * nl, (i - from + 1) * nl)
+        i += 1
+      }
+    }
+    // this call's misses: one forward frame per distinct key, and each
+    // place (frame, start, end, miss) it fills
+    val missOf = new java.util.HashMap[String, Integer]()
+    val missRuns = scala.collection.mutable.ArrayBuffer.empty[IndexedSeq[Piece]]
+    val pending = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, Int)]
+    var hits = 0L
+    var fi = 0
+    while (fi < frames.length) {
+      val frame = frames(fi)
+      var s = 0
+      while (s < frame.length) {
+        val wid = frame(s).wordId
+        require(s == 0 || wid > frame(s - 1).wordId,
+          s"word ids must increase along a frame: ${frame(s - 1).wordId} then $wid")
+        var e = s + 1
+        while (e < frame.length && frame(e).wordId == wid) e += 1
+        val key = runKey(frame, s, e)
+        val cached = runMemo.get(key)
+        if (cached != null) { fill(fi, s, e, cached); hits += 1 }
+        else {
+          var m = missOf.get(key)
+          if (m == null) {
+            m = missRuns.length
+            missOf.put(key, m)
+            missRuns += frame.slice(s, e)
+          }
+          pending += ((fi, s, e, m.intValue))
+        }
+        s = e
+      }
+      fi += 1
+    }
+    memoHits.add(hits)
+    if (missRuns.nonEmpty) {
+      memoMisses.add(pending.length)
+      val logits = forward(missRuns.toIndexedSeq).map { rows =>
+        val flat = new Array[Float](rows.length * nl)
+        var i = 0
+        while (i < rows.length) { System.arraycopy(rows(i), 0, flat, i * nl, nl); i += 1 }
+        flat
+      }
+      missOf.forEach { (key, m) =>
+        if (missRuns(m).length <= cfg.maxWordPieces) {
+          if (runMemo.size >= memoRuns) runMemo.clear()
+          runMemo.put(key, logits(m))
+        }
+      }
+      pending.foreach { case (f, s, e, m) => fill(f, s, e, logits(m)) }
+    }
+    out
+  }
+
+  /** The whole-frame forward pass: trunk over all frames in one batch, then
+    * the prototype head per piece. [[predict]] sends its misses through it;
+    * tests use it on whole frames as the reference for the memo. */
+  private[graft] def forward(frames: Seq[IndexedSeq[Piece]]): Array[Array[Array[Float]]] = {
     if (frames.isEmpty) return Array.empty
     val (h, offsets) = trunk(frames)
     frames.zipWithIndex.map { case (frame, fi) =>

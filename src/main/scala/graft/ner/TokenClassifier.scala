@@ -17,7 +17,10 @@ import graft.text.{Normalizer, Tokenizer}
   * GEMMs, multi-head attention, GELU FFN, layer norms) with embedded
   * deterministic weights — real inference FLOPs per frame, standing in for
   * the TinyBERN2 ONNX session that the zero-egress container cannot host.
-  * Swapping in an exported model touches ONLY [[ModelSession]].
+  * Swapping in an exported model touches ONLY [[ModelSession]]. A
+  * contextual model (frame-wide attention, as in a trained TinyBERN2) must
+  * not inherit MiniBern's word-run memo: its logits for a word depend on
+  * the rest of the frame.
   */
 object TokenClassifier {
 

@@ -38,11 +38,15 @@ class MiniBernSpec extends AnyFunSuite with SparkTestBase {
     assert(Activations.heaviside(logits).toSeq == Seq(0f, 0f, 1f, 1f, 0f))
   }
 
+  // the whole-frame forward pass: predict's word-run memo would make the
+  // next two cases hold by construction (WordMemoSpec pins the memo)
+  private val model = TokenClassifier.executorMiniBern
+
   test("word-local attention: in-context logits equal isolated-word logits") {
     val ctx = TokenClassifier.wordpieces("results window shows")
-    val ctxLogits = session.predict(Seq(ctx)).head
+    val ctxLogits = model.forward(Seq(ctx)).head
     val alone = TokenClassifier.wordpieces("window")
-    val aloneLogits = session.predict(Seq(alone)).head
+    val aloneLogits = model.forward(Seq(alone)).head
     val windowPieceIdxs = ctx.zipWithIndex.filter(_._1.wordId == 1).map(_._2)
     windowPieceIdxs.zipWithIndex.foreach { case (ci, ai) =>
       assert(ctxLogits(ci).toSeq == aloneLogits(ai).toSeq)
@@ -52,9 +56,9 @@ class MiniBernSpec extends AnyFunSuite with SparkTestBase {
   test("batching: batched frames produce the same logits as one-by-one") {
     val f1 = TokenClassifier.wordpieces("sort the records")
     val f2 = TokenClassifier.wordpieces("a vector arrived")
-    val batched = session.predict(Seq(f1, f2))
-    assert(batched(0).flatten.toSeq == session.predict(Seq(f1)).head.flatten.toSeq)
-    assert(batched(1).flatten.toSeq == session.predict(Seq(f2)).head.flatten.toSeq)
+    val batched = model.forward(Seq(f1, f2))
+    assert(batched(0).flatten.toSeq == model.forward(Seq(f1)).head.flatten.toSeq)
+    assert(batched(1).flatten.toSeq == model.forward(Seq(f2)).head.flatten.toSeq)
   }
 
   test("separation margin: vocab words hit cosine 1.0, all other corpus and " +
