@@ -33,13 +33,6 @@ import scala.jdk.CollectionConverters._
   */
 object Server {
 
-  // Responses go out as two writes (headers, then body). With Nagle on, the
-  // body waits for the client's delayed ACK of the headers, about 40 ms per
-  // keep-alive request. The JDK server reads this property once, when its
-  // ServerConfig class initializes, so it is set here, before the first
-  // HttpServer.create.
-  System.setProperty("sun.net.httpserver.nodelay", "true")
-
   private val mapper = new ObjectMapper()
 
   final class Service(resources: Resources) {

@@ -89,41 +89,4 @@ class ServerSpec extends AnyFunSuite {
         s"composed=$composed\noneShot=$oneShot")
     } finally server.stop(0)
   }
-
-  test("keep-alive requests are not held back by a delayed ACK") {
-    // Nagle on the server would hold each response body until the client's
-    // delayed ACK of the headers: about 40 ms per request on one connection
-    val server = graft.serve.Server.start(graft.index.Resources.corpus, 0)
-    val sock = new java.net.Socket("127.0.0.1", server.getAddress.getPort)
-    try {
-      sock.setTcpNoDelay(true); sock.setSoTimeout(5000)
-      val in = new java.io.BufferedInputStream(sock.getInputStream)
-      def line(): String = {
-        val sb = new StringBuilder
-        var c = in.read()
-        while (c != '\n' && c >= 0) { if (c != '\r') sb += c.toChar; c = in.read() }
-        sb.toString
-      }
-      def post(): Int = {
-        val body = """{"text":"the customer filter"}""".getBytes("UTF-8")
-        sock.getOutputStream.write((s"POST /api/kazu/ner_only HTTP/1.1\r\nHost: x\r\n" +
-          s"Content-Length: ${body.length}\r\n\r\n").getBytes("UTF-8") ++ body)
-        val status = line().split(" ")(1).toInt
-        var len = 0
-        var h = line()
-        while (h.nonEmpty) {
-          if (h.toLowerCase.startsWith("content-length:")) len = h.substring(15).trim.toInt
-          h = line()
-        }
-        in.readNBytes(len)
-        status
-      }
-      (0 until 5).foreach(_ => assert(post() == 200)) // warm-up
-      val t0 = System.nanoTime()
-      (0 until 20).foreach(_ => assert(post() == 200))
-      val ms = (System.nanoTime() - t0) / 1e6
-      info(f"20 keep-alive requests: $ms%.0f ms")
-      assert(ms < 400, f"20 sequential requests took $ms%.0f ms")
-    } finally { sock.close(); server.stop(0) }
-  }
 }
