@@ -6,7 +6,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import graft.index.Resources
 import graft.link.{Ladders, MappingResources, MappingStep}
 import graft.model._
-import graft.pipeline.Pages
+import graft.pipeline.{Pages, Pipeline}
 
 /** Ladder-parity export (round-4 directive #4): dump everything the
   * REFERENCE's pure-python StrategyRunner needs to replay this engine's
@@ -118,19 +118,11 @@ object LadderExport {
       }
     val withTransformer = mode == "default"
     val bc = spark.sparkContext.broadcast(res)
-    val pre = Pages.toDocs(spark, pages).mapPartitions { it =>
-      val session = graft.ner.TokenClassifier.executorSession
-      val split = graft.ner.EntitySplitter.processDoc(graft.ner.EntitySplitter.Config()) _
-      val nerDocs = it.map { d =>
-        val t = graft.ner.TrieNer.processDoc(bc.value)(d)
-        split(if (withTransformer) graft.ner.TokenClassifier.processDoc(session)(t) else t)
-      }
-      graft.link.DictionaryLinking.processPartition(bc.value)(nerDocs)
-    }
+    val pre = Pages.toDocs(spark, pages).mapPartitions(it => Pipeline.mapDocs(
+      Pipeline.steps(bc.value, withTransformerNer = withTransformer)
+        .takeWhile(_.name != "mapping"))(it))
     val preDocs = pre.collect().sortBy(_.url)
-    val postDocs = preDocs.iterator.map { d =>
-      MappingStep.processPartition(res, runner)(Iterator(d)).next()
-    }.toArray
+    val postDocs = preDocs.map(MappingStep.open(res, runner))
 
     // ---- injected model assets for the planted modes -----------------------
     if (mode == "gilda") {
@@ -261,10 +253,8 @@ object LadderExport {
           lit("utf-8")).as("html"),
         col("text"), col("lang"))
     val bc = spark.sparkContext.broadcast(res)
-    val pre = Pages.toDocs(spark, pages).mapPartitions { it =>
-      val split = graft.ner.EntitySplitter.processDoc(graft.ner.EntitySplitter.Config()) _
-      it.map(d => split(graft.ner.TrieNer.processDoc(bc.value)(d)))
-    }
+    val pre = Pages.toDocs(spark, pages).mapPartitions(it => Pipeline.mapDocs(
+      Pipeline.nerOnly(Pipeline.steps(bc.value, withTransformerNer = false)))(it))
     val preDocs = pre.collect().sortBy(_.url)
     val postDocs = preDocs.map(graft.link.EntityClassDisambiguation.processDoc(cfg))
     val docsArr = root.putArray("docs")

@@ -75,12 +75,16 @@ object DictionaryLinking {
     }
   }
 
-  def processPartition(res: Resources)(docs: Iterator[KDoc]): Iterator[KDoc] = {
+  def processPartition(res: Resources)(docs: Iterator[KDoc]): Iterator[KDoc] =
+    docs.map(open(res))
+
+  /** The per-document linking function of one partition (or request). */
+  def open(res: Resources): KDoc => KDoc = {
     val idx = indexesFor(res)
     // partition-scoped lookup cache (the reference's LRU, relationally:
     // dedup by (matchNorm, class) before the index probe)
     val cache = scala.collection.mutable.HashMap.empty[(String, String), Seq[CandidateWithMetrics]]
-    docs.map { doc =>
+    doc =>
       if (doc.error.isDefined) doc
       else doc.copy(sections = doc.sections.map { s =>
         s.copy(entities = s.entities.map { e =>
@@ -92,6 +96,5 @@ object DictionaryLinking {
           }
         })
       })
-    }
   }
 }

@@ -284,16 +284,13 @@ object MappingStep {
   def processPartition(
       resources: Resources,
       runner: StrategyRunner
-  )(docs: Iterator[KDoc]): Iterator[KDoc] = {
+  )(docs: Iterator[KDoc]): Iterator[KDoc] =
+    docs.map(open(resources, runner))
+
+  /** Bind the task-local MappingResources for this thread and return the
+    * per-document mapping function. */
+  def open(resources: Resources, runner: StrategyRunner): KDoc => KDoc = {
     MappingResources.current.set(MappingResources.forResources(resources))
-    docs.map { doc =>
-      if (doc.error.isDefined) doc
-      else
-        try runner.process(doc)
-        catch {
-          case e: Exception =>
-            doc.copy(error = Some(s"MappingStep: ${e.getClass.getName}: ${e.getMessage}"))
-        }
-    }
+    doc => if (doc.error.isDefined) doc else runner.process(doc)
   }
 }

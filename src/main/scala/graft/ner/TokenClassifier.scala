@@ -360,11 +360,6 @@ object TokenClassifier {
 
   def processDoc(session: ModelSession, useMultilabel: Boolean = false)(doc: KDoc): KDoc =
     if (doc.error.isDefined) doc
-    else
-      try doc.copy(sections = doc.sections.map(s =>
-        s.copy(entities = s.entities ++ processText(session, s.text, useMultilabel))))
-      catch {
-        case e: Exception =>
-          doc.copy(error = Some(s"TokenClassifier: ${e.getMessage}"))
-      }
+    else doc.copy(sections = doc.sections.map(s =>
+      s.copy(entities = s.entities ++ processText(session, s.text, useMultilabel))))
 }

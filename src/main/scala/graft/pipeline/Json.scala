@@ -35,7 +35,7 @@ object Json {
         coalesce($"doc.lang", lit("")).as("lang"),
         coalesce($"doc.sections",
           typedlit(Seq.empty[graft.model.Section])).as("sections"),
-        when(corrupt, lit("corrupt json line"))
+        when(corrupt, lit("read_json: corrupt json line"))
           .otherwise($"doc.error").as("error"))
       .as[KDoc]
   }

@@ -95,17 +95,15 @@ object Main {
 
     stepGroup match {
       case "ner_only" =>
-        // trie + transformer NER, no linking/mapping: emit mention rows AND
-        // the document JSON so a later linking_only run can resume from it
-        // (step-group composability, ref pipeline/__init__.py:233-276)
+        // every step before linking: emit mention rows AND the document
+        // JSON so a later linking_only run can resume from it (step-group
+        // composability, ref pipeline/__init__.py:233-276)
         // persisted: the mention rows AND the docs-JSON hand-off are two
         // actions over the same (transformer-inference-heavy) lineage
         val int8 = cfg.int8Transformer
-        val docs = Pages.toDocs(spark, pages).mapPartitions { it =>
-          val session = graft.ner.TokenClassifier.executorSession(int8)
-          it.map(d => graft.ner.TokenClassifier.processDoc(session)(
-            graft.ner.TrieNer.processDoc(res.value)(d)))
-        }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val docs = Pages.toDocs(spark, pages).mapPartitions(it => Pipeline.mapDocs(
+            Pipeline.nerOnly(Pipeline.steps(res.value, int8Transformer = int8)))(it))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         docs.flatMap(d => d.sections.flatMap(_.entities.map(e =>
             (d.url, e.matchStr, e.entityClass, e.start, e.end, e.namespace))))
           .toDF("url", "match", "entity_class", "start", "end", "namespace")
@@ -113,8 +111,8 @@ object Main {
         Json.writeJson(docs, s"$output/docs_json")
         docs.unpersist()
       case "linking_only" =>
-        // consume ner_only's document JSON: run ONLY the linking + mapping +
-        // post-processing stages over the already-recognized entities
+        // consume ner_only's document JSON: run ONLY the linking_only steps
+        // over the already-recognized entities
         val docs = Json.readJson(spark, s"$input")
           .mapPartitions(Pipeline.linkingStages(res.value))
         Triples.fromDocs(spark, docs).toDF().write.mode("overwrite")

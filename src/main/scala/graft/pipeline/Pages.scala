@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 import graft.model._
 import graft.text.Html
 
@@ -64,9 +65,10 @@ object Pages {
   val SkipDocLen = 200000
 
   /** page rows → typed docs with boilerplate-stripped text as the single
-    * "body" section. When a page carries pre-extracted `text`, extraction
-    * must reproduce it byte-identically (north rule); a mismatch is recorded
-    * as a failure row (failures are rows, not task aborts).
+    * "body" section: the `extract` step. When a page carries pre-extracted
+    * `text`, extraction must reproduce it byte-identically (north rule); a
+    * mismatch, an oversized page and an extraction that throws are each
+    * recorded as a failure row (failures are rows, not task aborts).
     */
   def toDocs(spark: SparkSession, pages: DataFrame): Dataset[KDoc] = {
     import spark.implicits._
@@ -74,17 +76,20 @@ object Pages {
       .select($"url", $"warc_ts", $"html", $"text", $"lang")
       .as[PageRow]
       .map { p =>
-        val extracted = Html.extractBytes(p.html)
-        if (p.text != null && p.text.nonEmpty && extracted != p.text)
-          KDoc(p.url, p.warc_ts, extracted, p.lang,
-            sections = Seq.empty,
-            error = Some(s"text-extraction mismatch (${Html.version})"))
-        else if (extracted.length > SkipDocLen)
-          KDoc(p.url, p.warc_ts, "", p.lang, Seq.empty,
-            error = Some(s"doc length ${extracted.length} > $SkipDocLen"))
-        else
-          KDoc(p.url, p.warc_ts, extracted, p.lang,
-            sections = Seq(Section("body", extracted)))
+        def failed(text: String, error: String) =
+          KDoc(p.url, p.warc_ts, text, p.lang, Seq.empty, error = Some(s"extract: $error"))
+        try {
+          val extracted = Html.extractBytes(p.html)
+          if (p.text != null && p.text.nonEmpty && extracted != p.text)
+            failed(extracted, s"text-extraction mismatch (${Html.version})")
+          else if (extracted.length > SkipDocLen)
+            failed("", s"doc length ${extracted.length} > $SkipDocLen")
+          else
+            KDoc(p.url, p.warc_ts, extracted, p.lang,
+              sections = Seq(Section("body", extracted)))
+        } catch {
+          case NonFatal(e) => failed("", s"${e.getClass.getName}: ${e.getMessage}")
+        }
       }
   }
 }

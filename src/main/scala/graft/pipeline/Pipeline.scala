@@ -2,21 +2,24 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.broadcast.Broadcast
+import scala.util.control.NonFatal
 import graft.model._
 import graft.index.Resources
-import graft.ner.{TokenClassifier, TrieNer}
-import graft.link.{ClassFilter, DictionaryLinking, EntityClassDisambiguation, Ladders, MappingStep, StrategyRunner}
-import graft.post.{Cleanup, MergeOverlaps}
+import graft.ner.{EntitySplitter, TokenClassifier, TrieNer}
+import graft.link.{ClassFilter, DictionaryLinking, EntityClassDisambiguation, Ladders, MappingStep, StrategyRunner, Xref}
+import graft.post.{Abbreviation, Cleanup, MergeOverlaps}
 
 /** Stage composition + checkpoint/resume + per-partition lineage
   * (ref Pipeline driver, kazu/pipeline/__init__.py:132-326; step order
   * kazu/conf/Pipeline/default.yaml:3-11; resumability per the north rule).
   *
-  * Every stage is a narrow `Dataset[KDoc] => Dataset[KDoc]` map — the only
-  * shuffle boundaries in the whole flow are input partitioning and the final
-  * triple-side aggregations (SURVEY.md §3.1). Failure isolation: per-doc
-  * try/catch writes the error into the row (`KDoc.error`), so one bad page
-  * never kills a task; failed rows route to the failures table.
+  * The step order lives in one place, [[Pipeline.steps]]; every path runs
+  * that list or a named slice of it. Every step is a narrow per-document map
+  * — the only shuffle boundaries in the whole flow are input partitioning
+  * and the final triple-side aggregations (SURVEY.md §3.1). Failure
+  * isolation: [[Pipeline.compose]] wraps every step once and writes an
+  * exception into the row (`KDoc.error`), so one bad page never kills a
+  * task; failed rows route to the failures table under the step's name.
   *
   * Checkpointing: each named stage can persist to `<dir>/<stage>` (parquet
   * here; Iceberg snapshots in production — same contract: atomic replace +
@@ -134,92 +137,97 @@ object Pipeline {
     spark.read.parquet(Snapshots.versionPath(table, v).toString).as[KDoc]
   }
 
-  /** Operator fusion: all post-extract stages are per-document pure
-    * functions, so without checkpoint boundaries they compose into ONE
-    * `mapPartitions` — one encoder deserialize + serialize per document for
-    * the whole pipeline instead of one per stage. At 32 cores this roughly
-    * halves allocation/memory traffic, which is the scaling bottleneck of
-    * the staged plan (each stage boundary re-materializes the full nested
-    * KDoc row). Checkpointed runs keep the staged path: resumability is
-    * exactly the ability to cut the fused chain.
-    */
-  def fusedStages(
-      resources: Resources,
-      runner: StrategyRunner,
-      classRules: ClassFilter.Rules,
-      withTransformerNer: Boolean,
-      splitter: graft.ner.EntitySplitter.Config = graft.ner.EntitySplitter.Config.default,
-      useExplosionMatcher: Boolean = false,
-      classDisambig: EntityClassDisambiguation.Config =
-        EntityClassDisambiguation.Config(Map.empty),
-      xrefs: Option[graft.link.Xref.XrefMap] = None,
-      int8Transformer: Boolean = false
-  )(docs: Iterator[KDoc]): Iterator[KDoc] = {
-    val session = TokenClassifier.executorSession(int8Transformer)
-    // gazetteer step selection, as the reference configures its pipeline
-    // steps: the char automaton (default) or the explosion-style token
-    // matcher — semantics-equivalent (cross-validated entity-for-entity)
-    val gazetteer: KDoc => KDoc =
-      if (useExplosionMatcher) graft.ner.ExplosionMatcher.processDoc(resources)
-      else TrieNer.processDoc(resources)
-    val transformer = TokenClassifier.processDoc(session) _
-    val splitDoc = graft.ner.EntitySplitter.processDoc(splitter) _
-    // optional entity-class disambiguation (E16, non-default in the
-    // reference too): resolves span-identical multi-class groups by
-    // sentence context BEFORE linking, as the reference step does
-    val ecd: KDoc => KDoc =
-      if (classDisambig.isEmpty) identity
-      else EntityClassDisambiguation.processDoc(classDisambig)
-    // partition-level stages wrap the per-doc chain; the non-contiguous
-    // splitter runs right after NER, as the reference attaches it to the
-    // NER step (entity_post_processing.py)
-    val nerDocs = docs.map { d =>
-      val t = gazetteer(d)
-      ecd(splitDoc(if (withTransformerNer) transformer(t) else t))
-    }
-    linkingStages(resources, runner, classRules, xrefs)(nerDocs)
-  }
+  /** One named document step. `open` runs once per partition (or server
+    * request) and returns the per-document function; it holds the
+    * per-partition state: the dictionary-lookup cache, the task-local
+    * mapping resources, the transformer session. */
+  final case class Step(name: String, open: () => KDoc => KDoc)
 
-  /** The `linking_only` step group (ref conf/Pipeline/default.yaml:14-20,
-    * pipeline/__init__.py:233-276): every stage AFTER NER, over documents
-    * that already carry entities — composable with a prior `ner_only`
-    * output (docs JSON). `fusedStages` = NER + this. Deliberate widening vs
-    * the reference's configured group (which lists only dictionary linking
-    * + mapping): including the post-processing tail here makes
-    * `ner_only ∘ linking_only ≡ full pipeline` hold exactly — spec-pinned
-    * both through the docs-JSON hand-off and over HTTP. */
-  def linkingStages(
+  /** The default document pipeline: the ONE place the step order lives,
+    * mirroring the reference default step order
+    * (conf/Pipeline/default.yaml:3-11). Every path runs this list or a slice
+    * of it: the fused and checkpointed [[run]], [[nerOnly]] /
+    * [[linkingOnly]] (`pipeline.Main` and the server routes), streaming and
+    * the ladder export. A step whose config is empty is left out. Extraction
+    * is not a step: it maps page rows to docs ([[Pages.toDocs]]).
+    *
+    *   trie_ner → transformer_ner → entity_splitter → entity_class_disambig
+    *   → dict_linking → class_filter → mapping → xref → abbrev → cleanup
+    *   → merge
+    */
+  def steps(
       resources: Resources,
       runner: StrategyRunner = Ladders.default,
       classRules: ClassFilter.Rules = ClassFilter.Rules(),
-      xrefs: Option[graft.link.Xref.XrefMap] = None
-  )(docs: Iterator[KDoc]): Iterator[KDoc] = {
-    val cleanupCfg = Cleanup.Config()
-    val mergeCfg = MergeOverlaps.Config()
-    val classFilter = ClassFilter.processDoc(classRules) _
-    // E17 cross-reference expansion rides mapping post-processing, as the
-    // reference's CrossReferenceManager does (disabled by default there too)
-    val xrefStep: KDoc => KDoc =
-      xrefs.map(graft.link.Xref.processDoc _).getOrElse(identity[KDoc] _)
-    val perDocAfterLinking: KDoc => KDoc = d =>
-      MergeOverlaps.processDoc(mergeCfg)(
-        Cleanup.processDoc(cleanupCfg)(Abbreviations.step(d)))
-    val linked = DictionaryLinking.processPartition(resources)(docs)
-      .map(classFilter)
-    MappingStep.processPartition(resources, runner)(linked)
-      .map(xrefStep)
-      .map(perDocAfterLinking)
+      withTransformerNer: Boolean = true,
+      classDisambig: EntityClassDisambiguation.Config =
+        EntityClassDisambiguation.Config(Map.empty),
+      xrefs: Option[Xref.XrefMap] = None,
+      int8Transformer: Boolean = false
+  ): Seq[Step] = {
+    def pure(name: String, f: KDoc => KDoc) = Step(name, () => f)
+    Seq(
+      Some(pure("trie_ner", TrieNer.processDoc(resources))),
+      Option.when(withTransformerNer)(Step("transformer_ner", () =>
+        TokenClassifier.processDoc(TokenClassifier.executorSession(int8Transformer)))),
+      // the non-contiguous splitter runs right after NER, as the reference
+      // attaches it to the NER step (entity_post_processing.py)
+      Some(pure("entity_splitter", EntitySplitter.processDoc(EntitySplitter.Config.default))),
+      // optional entity-class disambiguation (E16, non-default in the
+      // reference too) resolves span-identical multi-class groups BEFORE
+      // linking, as the reference step does
+      Option.when(!classDisambig.isEmpty)(
+        pure("entity_class_disambig", EntityClassDisambiguation.processDoc(classDisambig))),
+      Some(Step("dict_linking", () => DictionaryLinking.open(resources))),
+      Option.when(!classRules.isEmpty)(pure("class_filter", ClassFilter.processDoc(classRules))),
+      Some(Step("mapping", () => MappingStep.open(resources, runner))),
+      // E17 cross-reference expansion rides mapping post-processing, as the
+      // reference's CrossReferenceManager does (disabled by default there too)
+      xrefs.map(x => pure("xref", Xref.processDoc(x))),
+      Some(pure("abbrev", Abbreviation.processDoc(_: KDoc))),
+      Some(pure("cleanup", Cleanup.processDoc(Cleanup.Config()))),
+      Some(pure("merge", MergeOverlaps.processDoc(MergeOverlaps.Config())))
+    ).flatten
   }
 
-  private object Abbreviations {
-    val step: KDoc => KDoc = graft.post.Abbreviation.processDoc
+  /** The `ner_only` step group (ref conf/Pipeline/default.yaml:14-20,
+    * pipeline/__init__.py:233-276): every step before dictionary linking. */
+  def nerOnly(steps: Seq[Step]): Seq[Step] = steps.takeWhile(_.name != "dict_linking")
+
+  /** The `linking_only` step group: dictionary linking onward, over docs
+    * that already carry entities. Deliberate widening vs the reference's
+    * configured group (which lists only dictionary linking + mapping):
+    * including the post-processing tail makes `ner_only ∘ linking_only ≡
+    * full pipeline` hold exactly — spec-pinned both through the docs-JSON
+    * hand-off and over HTTP. */
+  def linkingOnly(steps: Seq[Step]): Seq[Step] = steps.dropWhile(_.name != "dict_linking")
+
+  /** Open every step and chain them under the one failure-isolation
+    * contract: a doc that already failed passes through unchanged, and a
+    * non-fatal exception becomes the doc's error, prefixed with the step's
+    * name — one bad page never kills a task. */
+  def compose(steps: Seq[Step]): KDoc => KDoc = {
+    val opened = steps.map(s => (s.name, s.open()))
+    doc => opened.foldLeft(doc) { case (d, (name, f)) =>
+      if (d.error.isDefined) d
+      else
+        try f(d)
+        catch {
+          case NonFatal(e) =>
+            d.copy(error = Some(s"$name: ${e.getClass.getName}: ${e.getMessage}"))
+        }
+    }
   }
 
-  /** The default document pipeline, mirroring the reference default step
-    * order (conf/Pipeline/default.yaml:3-11):
-    * extract → trie NER → transformer NER → dictionary linking → class
-    * filter → mapping → abbreviation → cleanup → overlap merge.
-    */
+  /** Run `steps` over one partition; the steps open when it starts. */
+  def mapDocs(steps: Seq[Step])(docs: Iterator[KDoc]): Iterator[KDoc] =
+    docs.map(compose(steps))
+
+  /** The `linking_only` step group over one partition of default-config
+    * docs (`pipeline.Main`'s linking_only). */
+  def linkingStages(resources: Resources)(docs: Iterator[KDoc]): Iterator[KDoc] =
+    mapDocs(linkingOnly(steps(resources)))(docs)
+
   /** Wrap a partition's doc stream so (rows, failures) reach the lineage
     * accumulator exactly once, on exhaustion — the ONE definition of the
     * count-on-exhaustion contract, shared by the checkpointed stage writer
@@ -263,14 +271,25 @@ object Pipeline {
       cfg: Config = Config(),
       classRules: ClassFilter.Rules = ClassFilter.Rules(),
       withTransformerNer: Boolean = true,
-      splitter: graft.ner.EntitySplitter.Config = graft.ner.EntitySplitter.Config.default,
-      useExplosionMatcher: Boolean = false,
       classDisambig: EntityClassDisambiguation.Config =
         EntityClassDisambiguation.Config(Map.empty),
-      xrefs: Option[graft.link.Xref.XrefMap] = None
+      xrefs: Option[Xref.XrefMap] = None
   ): (Dataset[KDoc], Seq[LineageRow]) = {
+    val int8 = cfg.int8Transformer
+    runSteps(spark, pages, resources, cfg)(r =>
+      steps(r, runner, classRules, withTransformerNer, classDisambig, xrefs, int8))
+  }
+
+  /** [[run]] over the step list `stepsOf` builds from the executor's
+    * resources (built inside each task, so the broadcast never rides a task
+    * closure). Tests substitute steps here. */
+  private[graft] def runSteps(
+      spark: SparkSession,
+      pages: org.apache.spark.sql.DataFrame,
+      resources: Broadcast[Resources],
+      cfg: Config
+  )(stepsOf: Resources => Seq[Step]): (Dataset[KDoc], Seq[LineageRow]) = {
     import spark.implicits._
-    val runCtx = new Run(spark, cfg, scala.collection.mutable.ArrayBuffer.empty)
 
     // Input balancing (SURVEY §4): the transformer stage is the compute
     // hot spot, so the input must spread across all cores BEFORE the fused
@@ -283,19 +302,22 @@ object Pipeline {
       if (pages.rdd.getNumPartitions < parallelism)
         pages.repartition(parallelism, org.apache.spark.sql.functions.col("url"))
       else pages
+    val docs = Pages.toDocs(spark, pagesBalanced)
 
     if (cfg.checkpointDir.isEmpty) {
-      // fused fast path: extract + all doc-local stages in one mapPartitions.
+      // fused fast path: extract + every step in one mapPartitions — one
+      // encoder deserialize + serialize per document for the whole pipeline
+      // instead of one per step. At 32 cores this roughly halves
+      // allocation/memory traffic, the scaling bottleneck of the staged plan
+      // (each step boundary re-materializes the full nested KDoc row).
+      // Checkpointed runs cut the chain: resumability is exactly that cut.
       // Lineage without a materialization barrier: per-partition counts are
       // tracked in a CollectionAccumulator and surface as lineage rows once
       // an action has run (counts reflect tasks executed so far).
       val acc = spark.sparkContext.collectionAccumulator[(Int, Long, Long)]("graft-lineage")
       val resourceVersion = cfg.resourceVersion
-      val out = Pages.toDocs(spark, pagesBalanced).mapPartitions { it =>
-        countedPartition(acc)(fusedStages(resources.value, runner, classRules,
-          withTransformerNer, splitter, useExplosionMatcher, classDisambig,
-          xrefs, cfg.int8Transformer)(it))
-      }
+      val out = docs.mapPartitions(it =>
+        countedPartition(acc)(mapDocs(stepsOf(resources.value))(it)))
       // a view: materializes rows whenever accessed, so lineage read AFTER
       // an action reflects the executed partitions
       val lineageView: Seq[LineageRow] = new scala.collection.immutable.AbstractSeq[LineageRow] {
@@ -311,53 +333,22 @@ object Pipeline {
       return (out, lineageView)
     }
 
-    val docs = runCtx.stage("extract", Pages.toDocs(spark, pagesBalanced))
-    val trie =
-      if (useExplosionMatcher)
-        runCtx.stage("explosion_ner",
-          docs.mapPartitions(_.map(graft.ner.ExplosionMatcher.processDoc(resources.value))))
-      else runCtx.stage("trie_ner",
-        docs.mapPartitions(_.map(TrieNer.processDoc(resources.value))))
-    val ner =
-      if (!withTransformerNer) trie
-      else runCtx.stage("transformer_ner",
-        trie.mapPartitions { it =>
-          val session = TokenClassifier.executorSession(cfg.int8Transformer)
-          it.map(TokenClassifier.processDoc(session))
-        })
-    val split =
-      if (splitter.isEmpty) ner
-      else runCtx.stage("entity_splitter",
-        ner.map(graft.ner.EntitySplitter.processDoc(splitter)))
-    val classDis =
-      if (classDisambig.isEmpty) split
-      else runCtx.stage("entity_class_disambig",
-        split.map(EntityClassDisambiguation.processDoc(classDisambig)))
-    val linked = runCtx.stage("dict_linking",
-      classDis.mapPartitions(DictionaryLinking.processPartition(resources.value)))
-    val filtered =
-      if (classRules.isEmpty) linked
-      else runCtx.stage("class_filter",
-        linked.map(ClassFilter.processDoc(classRules)))
-    val mapped = runCtx.stage("mapping",
-      filtered.mapPartitions(MappingStep.processPartition(resources.value, runner)))
-    val xrefd = xrefs match {
-      case Some(x) =>
-        runCtx.stage("xref", mapped.map(graft.link.Xref.processDoc(x)))
-      case None => mapped
-    }
-    val abbrev = runCtx.stage("abbrev",
-      xrefd.mapPartitions(_.map(graft.post.Abbreviation.processDoc)))
-    val cleaned = runCtx.stage("cleanup",
-      abbrev.map(Cleanup.processDoc(Cleanup.Config())))
-    val merged = runCtx.stage("merge",
-      cleaned.map(MergeOverlaps.processDoc(MergeOverlaps.Config())))
-    (merged, runCtx.lineage.toSeq)
+    // checkpointed: one snapshot per step, named after it
+    val runCtx = new Run(spark, cfg, scala.collection.mutable.ArrayBuffer.empty)
+    val out = stepsOf(resources.value).map(_.name)
+      .foldLeft(runCtx.stage("extract", docs)) { (ds, name) =>
+        runCtx.stage(name, ds.mapPartitions(it =>
+          mapDocs(stepsOf(resources.value).filter(_.name == name))(it)))
+      }
+    (out, runCtx.lineage.toSeq)
   }
 
+  /** Failed docs as failure rows. A failure's error text starts with the
+    * name of the step that wrote it (`extract` for [[Pages.toDocs]]), which
+    * becomes the row's stage. */
   def failures(spark: SparkSession, docs: Dataset[KDoc], runId: String): Dataset[FailureRow] = {
     import spark.implicits._
-    docs.flatMap(d => d.error.map(e => FailureRow(d.url, "pipeline", e, runId)))
+    docs.flatMap(d => d.error.map(e => FailureRow(d.url, e.takeWhile(_ != ':'), e, runId)))
   }
 
   /** Incremental ingest: restrict a page batch to urls NOT already present

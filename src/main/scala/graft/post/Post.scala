@@ -188,18 +188,14 @@ object Cleanup {
         }
       })))
 
-  /** Compose actions with the pipeline's failure-isolation contract: a doc
-    * already failed passes through; an action that throws writes the error
-    * into the row (ref CleanupStep over document_iterating_step — the
-    * failing doc lands in failures, the rest proceed). */
+  /** Compose actions; a doc already failed passes through. An action that
+    * throws fails the doc through the pipeline's one failure-isolation
+    * wrapper, `Pipeline.compose` (ref CleanupStep over
+    * document_iterating_step — the failing doc lands in failures, the rest
+    * proceed). */
   def step(actions: Seq[Action])(doc: KDoc): KDoc =
     if (doc.error.isDefined) doc
-    else
-      try actions.foldLeft(doc)((d, a) => a(d))
-      catch {
-        case scala.util.control.NonFatal(ex) =>
-          doc.copy(error = Some(s"CleanupStep: ${ex.getMessage}"))
-      }
+    else actions.foldLeft(doc)((d, a) => a(d))
 
   /** The default-config path, expressed as the equivalent action chain
     * (drop-by-confidence → strip URIs → drop unmapped low-confidence →

@@ -3,9 +3,7 @@ package graft.serve
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.index.Resources
-import graft.link.{ClassFilter, Ladders}
 import graft.model._
-import graft.ner.{TokenClassifier, TrieNer}
 import graft.pipeline.Pipeline
 
 import java.net.InetSocketAddress
@@ -20,8 +18,8 @@ import scala.jdk.CollectionConverters._
   * launch per request, and request latency is the per-doc pipeline cost.
   *
   *   - POST /api/kazu/ner_and_linking   {"text": "..."} → full pipeline
-  *   - POST /api/kazu/ner_only          {"text": "..."} → C1 + C2 only
-  *     (step groups, ref conf/Pipeline/default.yaml:14-20)
+  *   - POST /api/kazu/ner_only          {"text": "..."} → every step
+  *     before linking (step groups, ref conf/Pipeline/default.yaml:14-20)
   *   - POST /api/kazu/linking_only      document JSON (a ner_only response)
   *     → linking + mapping + post-processing over the carried entities
   *   - POST /api/kazu/batch             [{"text": "..."}, ...] (array
@@ -35,23 +33,20 @@ object Server {
 
   private val mapper = new ObjectMapper()
 
+  /** Each call opens its steps for that one request (ref step groups,
+    * kazu/web/routes.py:20-29 + conf/Pipeline/default.yaml:14-20). */
   final class Service(resources: Resources) {
-    private val runner = Ladders.default
-    private val session = TokenClassifier.executorSession
+    private val all = Pipeline.steps(resources)
+    private val ner = Pipeline.nerOnly(all)
+    private val linking = Pipeline.linkingOnly(all)
 
-    def nerOnly(doc: KDoc): KDoc =
-      TokenClassifier.processDoc(session)(TrieNer.processDoc(resources)(doc))
+    def nerOnly(doc: KDoc): KDoc = Pipeline.compose(ner)(doc)
 
-    def nerAndLinking(doc: KDoc): KDoc =
-      Pipeline.fusedStages(resources, runner, ClassFilter.Rules(),
-        withTransformerNer = true)(Iterator(doc)).next()
+    def nerAndLinking(doc: KDoc): KDoc = Pipeline.compose(all)(doc)
 
-    /** Every stage AFTER NER, over a document that already carries entities
-      * (ref linking_only step group, kazu/web/routes.py:20-29 +
-      * conf/Pipeline/default.yaml:14-20) — composable with a prior ner_only
-      * response. */
-    def linkingOnly(doc: KDoc): KDoc =
-      Pipeline.linkingStages(resources, runner)(Iterator(doc)).next()
+    /** Every step AFTER NER, over a document that already carries entities
+      * — composable with a prior ner_only response. */
+    def linkingOnly(doc: KDoc): KDoc = Pipeline.compose(linking)(doc)
 
     def docFromText(text: String, idx: String): KDoc =
       KDoc(idx, new java.sql.Timestamp(0L), text, "en",

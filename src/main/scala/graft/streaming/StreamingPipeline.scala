@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.model._
 import graft.index.Resources
-import graft.link.{ClassFilter, Ladders}
 import graft.pipeline.Pipeline
 
 /** Structured-Streaming front-end for continuous KG construction.
@@ -35,8 +34,7 @@ object StreamingPipeline {
   ): Dataset[Triple] = {
     import spark.implicits._
     val docs = graft.pipeline.Pages.toDocs(spark, pages)
-      .mapPartitions(Pipeline.fusedStages(resources, Ladders.default,
-        ClassFilter.Rules(), withTransformerNer = true))
+      .mapPartitions(it => Pipeline.mapDocs(Pipeline.steps(resources))(it))
     graft.triples.Triples.fromDocs(spark, docs)
   }
 
@@ -55,8 +53,7 @@ object StreamingPipeline {
     // are watermarked with a time-range join condition (neither held here:
     // every page and triple ever seen would be retained)
     val docs = graft.pipeline.Pages.toDocs(spark, pages)
-      .mapPartitions(Pipeline.fusedStages(resources, Ladders.default,
-        ClassFilter.Rules(), withTransformerNer = true))
+      .mapPartitions(it => Pipeline.mapDocs(Pipeline.steps(resources))(it))
     docs.flatMap(d => graft.triples.Triples.fromDoc(d).map(t => (t.pred, d.warcTs)))
       .toDF("pred", "warc_ts")
       .withWatermark("warc_ts", watermark)

@@ -164,8 +164,9 @@ class ExplosionMatcherSpec extends AnyFunSuite {
     val pages = graft.pipeline.Pages.fromDocuments(spark, "/root/testdata/sf0.001")
       .filter(expr("cast(regexp_extract(url, '([0-9]+)$', 1) as long) < 40"))
     val (a, _) = graft.pipeline.Pipeline.run(spark, pages, res)
-    val (b, _) = graft.pipeline.Pipeline.run(spark, pages, res,
-      useExplosionMatcher = true)
+    // the same step list with the gazetteer step swapped
+    val (b, _) = graft.pipeline.Pipeline.runSteps(spark, pages, res,
+      graft.pipeline.Pipeline.Config())(ExplosionMatcherSpec.withExplosionMatcher)
     def key(t: graft.model.Triple) = (t.url, t.start, t.end, t.pred, t.obj, t.confidence)
     val ta = graft.triples.Triples.fromDocs(spark, a).collect().map(key).toSet
     val tb = graft.triples.Triples.fromDocs(spark, b).collect().map(key).toSet
@@ -195,6 +196,15 @@ class ExplosionMatcherSpec extends AnyFunSuite {
       }
     } finally () // shared session; do not stop
   }
+}
+
+object ExplosionMatcherSpec {
+  /** The default step list with the explosion-style matcher as `trie_ner`. */
+  val withExplosionMatcher: Resources => Seq[graft.pipeline.Pipeline.Step] = r =>
+    graft.pipeline.Pipeline.steps(r).map { s =>
+      if (s.name != "trie_ner") s
+      else graft.pipeline.Pipeline.Step(s.name, () => graft.ner.ExplosionMatcher.processDoc(r))
+    }
 }
 
 class EntitySplitterSpec extends AnyFunSuite {
@@ -260,18 +270,15 @@ class EntitySplitterSpec extends AnyFunSuite {
   }
 
   test("splitter is reachable from Pipeline.run via config") {
-    // wiring check without Spark: the fused per-partition chain applies the
-    // splitter after NER when configured
+    // wiring check without Spark: the step list applies the default
+    // splitter config (numerical lists of genes) after NER
     val res = graft.index.Resources.corpus
     val doc = KDoc("u", new java.sql.Timestamp(0),
       "the XQ1/2 thing", "en",
       Seq(Section("body", "the XQ1/2 thing",
-        Seq(m("the XQ1/2 thing", 4, 9, "operator")))))
-    val out = graft.pipeline.Pipeline.fusedStages(res,
-      graft.link.Ladders.default, graft.link.ClassFilter.Rules(),
-      withTransformerNer = false,
-      splitter = EntitySplitter.Config(numericalClasses = Set("operator")))(
-      Iterator(doc)).next()
+        Seq(m("the XQ1/2 thing", 4, 9, "gene")))))
+    val out = graft.pipeline.Pipeline.compose(
+      graft.pipeline.Pipeline.steps(res, withTransformerNer = false))(doc)
     val matches = out.entities.map(_.matchStr)
     assert(matches.contains("XQ2"), matches)
   }

@@ -40,15 +40,19 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
         "good sort doc", "en"),
       PageRow("u3", new java.sql.Timestamp(0),
         "<html><body>other</body></html>".getBytes("UTF-8"),
-        "DIFFERENT pre-extracted text", "en")
+        "DIFFERENT pre-extracted text", "en"),
+      // no html bytes: extraction itself throws
+      PageRow("u4", new java.sql.Timestamp(0), null, "", "en")
     ).toDF()
     val docs = Pages.toDocs(spark, pages).collect()
     assert(docs.find(_.url == "u1").get.error.exists(_.contains("doc length")))
     assert(docs.find(_.url == "u2").get.error.isEmpty)
     assert(docs.find(_.url == "u3").get.error.exists(_.contains("mismatch")))
+    assert(docs.find(_.url == "u4").get.error.exists(_.contains("NullPointerException")))
     val fails = Pipeline.failures(spark,
       Pages.toDocs(spark, pages), "run-test").collect()
-    assert(fails.map(_.url).toSet == Set("u1", "u3"))
+    assert(fails.map(_.url).toSet == Set("u1", "u3", "u4"))
+    assert(fails.forall(_.stage == "extract"), fails.toSeq)
   }
 
   test("checkpoint/resume: identical triples, lineage rows per stage×partition") {
@@ -141,12 +145,8 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val res = spark.sparkContext.broadcast(Resources.corpus)
     val pages = Pages.fromDocuments(spark, sfDir).limit(100)
-    // ner_only: trie + transformer, no linking
-    val nerDocs = Pages.toDocs(spark, pages).mapPartitions { it =>
-      val session = graft.ner.TokenClassifier.executorSession
-      it.map(d => graft.ner.TokenClassifier.processDoc(session)(
-        graft.ner.TrieNer.processDoc(res.value)(d)))
-    }
+    val nerDocs = Pages.toDocs(spark, pages).mapPartitions(it =>
+      Pipeline.mapDocs(Pipeline.nerOnly(Pipeline.steps(res.value)))(it))
     // hand off through the docs-JSON contract, as Main does
     val dir = java.nio.file.Files.createTempDirectory("graft-stepgroup").toString
     graft.pipeline.Json.writeJson(nerDocs, dir)
@@ -158,6 +158,18 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val full = Triples.fromDocs(spark, fullDocs).collect().toSet
     assert(composed == full)
     assert(composed.nonEmpty)
+
+    // a doc that already carries a gene mention: the entity splitter runs in
+    // ner_only, so BRCA1/2 is split the same way on both routes
+    val text = "BRCA1/2 carriers"
+    val gene = KDoc("g", new java.sql.Timestamp(0), text, "en", Seq(Section("body", text,
+      Seq(Mention("BRCA1/2", "gene", Seq(CharSpan(0, 7)), "t", 50, "BRCA1/2")))))
+    val steps = Pipeline.steps(res.value)
+    val viaGroups = Pipeline.compose(Pipeline.linkingOnly(steps))(
+      Pipeline.compose(Pipeline.nerOnly(steps))(gene))
+    val oneShot = Pipeline.compose(steps)(gene)
+    assert(viaGroups == oneShot)
+    assert(oneShot.entities.map(_.matchStr).contains("BRCA2"), oneShot.entities)
   }
 
   test("incremental ingest: a new crawl slice processes only unseen urls") {
@@ -462,4 +474,60 @@ class FusedLineageSpec extends AnyFunSuite with SparkTestBase {
     val roundTripped = back.filter(_.error.isEmpty).map(_.url).toSet
     assert(roundTripped == docs.collect().map(_.url).toSet)
   }
+}
+
+/** Failure isolation per step: each named step in turn throws on one doc.
+  * In both the fused and the checkpointed run that doc becomes exactly one
+  * failure row, named after the step, and every other doc keeps the clean
+  * run's triples. */
+class StepIsolationSpec extends AnyFunSuite with SparkTestBase {
+  import StepIsolationSpec._
+
+  test("a step that throws on one doc fails only that doc, fused and checkpointed") {
+    val res = spark.sparkContext.broadcast(Resources.corpus)
+    val pages = Pages.fromDocuments(spark, "/root/testdata/sf0.001")
+      .filter(expr("cast(regexp_extract(url, '([0-9]+)$', 1) as long) < 8"))
+    def triples(docs: org.apache.spark.sql.Dataset[KDoc]) =
+      Triples.fromDocs(spark, docs).collect().toSet
+    val (clean, _) = Pipeline.runSteps(spark, pages, res, Pipeline.Config())(allSteps)
+    assert(Pipeline.failures(spark, clean, "clean").count() == 0)
+    val cleanTriples = triples(clean)
+    val victim = cleanTriples.map(_.url).min
+    val names = allSteps(Resources.corpus).map(_.name)
+    assert(names == Seq("trie_ner", "transformer_ner", "entity_splitter",
+      "entity_class_disambig", "dict_linking", "class_filter", "mapping", "xref",
+      "abbrev", "cleanup", "merge"))
+    for (name <- names; checkpointed <- Seq(false, true)) {
+      val cfg =
+        if (!checkpointed) Pipeline.Config()
+        else Pipeline.Config(checkpointDir = Some(
+          s"file:${java.nio.file.Files.createTempDirectory("graft-iso")}"))
+      val (docs, _) = Pipeline.runSteps(spark, pages, res, cfg)(throwingAt(name, victim))
+      val fails = Pipeline.failures(spark, docs, "iso").collect()
+      val where = s"$name, checkpointed=$checkpointed"
+      assert(fails.map(f => (f.url, f.stage)).toSeq == Seq((victim, name)), where)
+      assert(fails.head.error.contains(Planted), where)
+      assert(triples(docs).filter(_.url != victim) == cleanTriples.filter(_.url != victim),
+        where)
+    }
+  }
+}
+
+object StepIsolationSpec {
+  val Planted = "planted step failure"
+
+  /** Every optional step switched on, with configs inert on the corpus. */
+  val allSteps: Resources => Seq[Pipeline.Step] = r => Pipeline.steps(r,
+    classRules = graft.link.ClassFilter.Rules(classRules = Map("no_such_class" -> Map.empty)),
+    classDisambig = SparkEntry.twoClassConfig,
+    xrefs = Some(graft.link.Xref.XrefMap(Map.empty)))
+
+  def throwingAt(name: String, victim: String): Resources => Seq[Pipeline.Step] = r =>
+    allSteps(r).map { s =>
+      if (s.name != name) s
+      else Pipeline.Step(name, () => {
+        val f = s.open()
+        d => if (d.url == victim) throw new IllegalStateException(Planted) else f(d)
+      })
+    }
 }

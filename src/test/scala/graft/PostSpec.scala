@@ -288,12 +288,16 @@ class CleanupSpec extends AnyFunSuite {
       Section("body", "cursed document with a gremlin entity", Seq(
         Mention("gremlin", "tricky_entity", Seq(CharSpan(23, 30)),
           "tricky_ent_step", 50, "G")))))
-    val step = Cleanup.step(Seq(dropShortSections, failOnGremlin)) _
+    // the pipeline's failure-isolation wrapper around the cleanup step
+    def isolated(actions: Seq[Cleanup.Action]): KDoc => KDoc =
+      graft.pipeline.Pipeline.compose(Seq(graft.pipeline.Pipeline.Step("cleanup",
+        () => Cleanup.step(actions))))
+    val step = isolated(Seq(dropShortSections, failOnGremlin))
     val out1 = step(doc1); val out2 = step(doc2)
     assert(out1.error.isEmpty && out1.sections.size == 1)
     assert(out2.error.exists(_.contains("tricky_ent_step")))
     // rank misconfiguration also routes to the failure row, not a crash
-    val bad = Cleanup.step(Seq(Cleanup.dropMappingsByParserNameRank(
+    val bad = isolated(Seq(Cleanup.dropMappingsByParserNameRank(
       Map("disease" -> Seq("only_this")))))(simpleCleanupDoc())
     assert(bad.error.exists(_.contains("no configured rank")))
   }
