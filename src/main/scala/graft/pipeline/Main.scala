@@ -112,9 +112,11 @@ object Main {
         docs.unpersist()
       case "linking_only" =>
         // consume ner_only's document JSON: run ONLY the linking_only steps
-        // over the already-recognized entities
+        // over the already-recognized entities. The broadcast is read
+        // inside the task: `res.value` here would ship the bundle in every
+        // task closure
         val docs = Json.readJson(spark, s"$input")
-          .mapPartitions(Pipeline.linkingStages(res.value))
+          .mapPartitions(it => Pipeline.linkingStages(res.value)(it))
         Triples.fromDocs(spark, docs).toDF().write.mode("overwrite")
           .partitionBy("pred").parquet(s"$output/triples")
       case "incremental" =>

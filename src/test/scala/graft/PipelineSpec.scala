@@ -151,7 +151,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-stepgroup").toString
     graft.pipeline.Json.writeJson(nerDocs, dir)
     val resumedDocs = graft.pipeline.Json.readJson(spark, dir)
-      .mapPartitions(Pipeline.linkingStages(res.value))
+      .mapPartitions(it => Pipeline.linkingStages(res.value)(it))
     val composed = Triples.fromDocs(spark, resumedDocs).collect().toSet
 
     val (fullDocs, _) = Pipeline.run(spark, pages, res)
@@ -459,20 +459,43 @@ class FusedLineageSpec extends AnyFunSuite with SparkTestBase {
     val pages = Pages.fromDocuments(spark, "/root/testdata/sf0.001").limit(4)
     val docs = Pages.toDocs(spark, pages)
     val good = graft.pipeline.Json.toJson(docs).collect().toSeq
-    val lines = (good :+ """{"url": "https://x", "warcTs": 12, truncated""").toDS()
+    // a well-formed line with one entity, and five variants that each break
+    // one field: a nested number that is a string, missing or null (the
+    // from_json reader aborted the task on these), sections that are not
+    // an array and an unparseable timestamp (it dropped the entities or the
+    // timestamp without an error)
+    val wellFormed = """{"url":"https://y","warcTs":"2023-01-01T00:00:00.000Z",""" +
+      """"sections":[{"name":"body","text":"EGFR","entities":[{"matchStr":"EGFR",""" +
+      """"entityClass":"gene","spans":[{"start":0,"end":4}],"namespace":"t",""" +
+      """"mentionConfidence":100,"matchNorm":"EGFR","candidates":[],"mappings":[]}],""" +
+      """"sentenceSpans":[]}]}"""
+    val malformed = Seq(
+      wellFormed.replace(""""start":0""", """"start":"x""""),
+      wellFormed.replace(""""start":0,""", ""),
+      wellFormed.replace(""""mentionConfidence":100""", """"mentionConfidence":null"""),
+      """{"url":"https://y","sections":{"name":"body","text":"EGFR"}}""",
+      wellFormed.replace(""""2023-01-01T00:00:00.000Z"""", """"yesterday""""))
+    assert(malformed.distinct.size == 5 && !malformed.contains(wellFormed))
+    val lines = (good ++ Seq("""{"url": "https://x", "warcTs": 12, truncated""",
+      wellFormed) ++ malformed).toDS()
     val back = graft.pipeline.Json.fromJson(spark, lines).collect()
-    assert(back.length == good.length + 1)
+    assert(back.length == good.length + 7)
     val bad = back.filter(_.error.isDefined)
-    assert(bad.length == 1 && bad.head.url.startsWith("corrupt-json-"))
-    assert(bad.head.sections != null && bad.head.sections.isEmpty)
-    // the failed row flows through the failure sink, and the linking stages
-    // skip it instead of NPEing (the module contract: failures are ROWS)
+    assert(bad.length == 6 && bad.forall(_.url.startsWith("corrupt-json-")))
+    assert(bad.forall(d => d.error.contains("read_json: corrupt json line") &&
+      d.warcTs.getTime == 0L && d.text.isEmpty && d.lang.isEmpty &&
+      d.sections != null && d.sections.isEmpty))
+    assert(bad.map(_.url).distinct.length == 6)
+    assert(back.find(_.url == "https://y").get.entities.map(_.spans) ==
+      Seq(Seq(graft.model.CharSpan(0, 4))))
+    // the failed rows flow through the failure sink, and the linking stages
+    // skip them instead of NPEing (the module contract: failures are ROWS)
     val res = spark.sparkContext.broadcast(Resources.corpus)
     val linked = graft.pipeline.Json.fromJson(spark, lines)
-      .mapPartitions(Pipeline.linkingStages(res.value)).collect()
-    assert(linked.count(_.error.isDefined) == 1)
+      .mapPartitions(it => Pipeline.linkingStages(res.value)(it)).collect()
+    assert(linked.count(_.error.isDefined) == 6)
     val roundTripped = back.filter(_.error.isEmpty).map(_.url).toSet
-    assert(roundTripped == docs.collect().map(_.url).toSet)
+    assert(roundTripped == docs.collect().map(_.url).toSet + "https://y")
   }
 }
 

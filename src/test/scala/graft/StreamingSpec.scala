@@ -61,20 +61,33 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 class JsonSpec extends AnyFunSuite with SparkTestBase {
   test("doc JSON round-trip is lossless through the full pipeline output") {
     import spark.implicits._
+    import graft.pipeline.{Pages, Pipeline}
     val res = spark.sparkContext.broadcast(Resources.corpus)
     val pages = graft.pipeline.Pages.fromDocuments(spark, "/root/testdata/sf0.001")
       .limit(20)
-    val (docs, _) = graft.pipeline.Pipeline.run(spark, pages, res)
-    val originals = docs.collect().sortBy(_.url)
-    val dir = java.nio.file.Files.createTempDirectory("graft-json").toString
-    Json.writeJson(docs, dir)
-    val roundTripped = Json.readJson(spark, dir).collect().sortBy(_.url)
-    assert(roundTripped.length == originals.length)
-    originals.zip(roundTripped).foreach { case (a, b) =>
-      assert(a.url == b.url && a.text == b.text)
-      assert(a.sections.map(_.entities.map(e => (e.matchStr, e.spans, e.mappings))) ==
-        b.sections.map(_.entities.map(e => (e.matchStr, e.spans, e.mappings))))
+    val (full, _) = Pipeline.run(spark, pages, res)
+    // the ner_only hand-off: trie mentions still carry their candidates
+    val ner = Pages.toDocs(spark, pages).mapPartitions(it =>
+      Pipeline.mapDocs(Pipeline.nerOnly(Pipeline.steps(res.value)))(it))
+    for (docs <- Seq(full, ner)) {
+      val originals = docs.collect().sortBy(_.url)
+      val dir = java.nio.file.Files.createTempDirectory("graft-json").toString
+      Json.writeJson(docs, dir)
+      val roundTripped = Json.readJson(spark, dir).collect().sortBy(_.url)
+      assert(roundTripped.toSeq == originals.toSeq)
     }
+    assert(full.collect().exists(_.entities.exists(_.mappings.nonEmpty)))
+    assert(ner.collect().exists(_.entities.exists(_.candidates.nonEmpty)))
+  }
+
+  test("warcTs round-trips at microsecond precision") {
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf("2023-11-14 22:13:20.123456")
+    val doc = graft.model.KDoc("https://t", ts, "x", "en",
+      Seq(graft.model.Section("body", "x")), Some("e"))
+    val back = Json.fromJson(spark, Json.toJson(Seq(doc).toDS())).collect()
+    assert(back.toSeq == Seq(doc))
+    assert(back.head.warcTs.getNanos == 123456000)
   }
 }
 
