@@ -60,10 +60,11 @@ object LadderExport {
     val eco = onto.putObject("entity_class_of")
     res.entityClassOf.toSeq.sortBy(_._1).foreach { case (p, c) => eco.put(p, c) }
     val cands = onto.putArray("candidates")
-    res.synonyms.toSeq.sortBy(_._1).foreach { case ((parser, synNorm), c) =>
+    // candidate and metadata rows are stored in (parser, key) order
+    (0 until res.candidateCount).map(res.candidateAt).foreach { c =>
       val cn = cands.addObject()
-      cn.put("parser", parser)
-      cn.put("syn_norm", synNorm)
+      cn.put("parser", c.parserName)
+      cn.put("syn_norm", c.synonymNorm)
       val raws = cn.putArray("raw_synonyms")
       c.rawSynonyms.foreach(raws.add)
       cn.put("is_symbolic", c.isSymbolic)
@@ -79,9 +80,9 @@ object LadderExport {
       }
     }
     val meta = onto.putArray("metadata")
-    res.metadata.toSeq.sortBy(_._1).foreach { case ((parser, idx), mr) =>
+    (0 until res.metadataCount).map(res.metadataAt).foreach { mr =>
       val mn = meta.addObject()
-      mn.put("parser", parser); mn.put("idx", idx)
+      mn.put("parser", mr.parserName); mn.put("idx", mr.idx)
       mn.put("default_label", mr.defaultLabel)
       val ex = mn.putObject("extras")
       mr.extras.toSeq.sortBy(_._1).foreach { case (k, v) => ex.put(k, v) }

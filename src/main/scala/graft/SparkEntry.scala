@@ -50,35 +50,13 @@ object SparkEntry {
     // the version string is the cache identity: a DIFFERENT bundle arriving
     // under an already-cached version (e.g. Resources.build left at its
     // default version) would silently execute against the cached bundle —
-    // fail loudly instead of returning wrong results. The compare must
-    // cover the WHOLE bundle: two builds from the same ontology rows differ
-    // in trie/payloads alone when only commonWords changes, and a
-    // synonyms+metadata compare would wave that through. Fast path: all
-    // production bundles are lazy-val singletons (eq); the structural
-    // compare only runs for rebuilt bundles.
-    def sameBundle(a: Resources, b: Resources): Boolean =
-      a.synonyms == b.synonyms && a.metadata == b.metadata &&
-        a.entityClassOf == b.entityClassOf &&
-        java.util.Arrays.equals(
-          a.trie.keys.asInstanceOf[Array[AnyRef]],
-          b.trie.keys.asInstanceOf[Array[AnyRef]]) &&
-        a.payloads.length == b.payloads.length &&
-        a.payloads.indices.forall(i =>
-          a.payloads(i).length == b.payloads(i).length &&
-            a.payloads(i).indices.forall { j =>
-              val (p, q) = (a.payloads(i)(j), b.payloads(i)(j))
-              // field-wise: GazPayload's case == compares its Array field
-              // by reference, which would falsely reject an identical
-              // REBUILT bundle
-              p.entityClass == q.entityClass &&
-              p.mentionConfidence == q.mentionConfidence &&
-              p.caseSensitive == q.caseSensitive &&
-              p.synNorm == q.synNorm && p.originalCase == q.originalCase &&
-              java.util.Arrays.equals(
-                p.parserNames.asInstanceOf[Array[AnyRef]],
-                q.parserNames.asInstanceOf[Array[AnyRef]])
-            })
-    require((cachedRes eq res) || sameBundle(cachedRes, res),
+    // fail loudly instead of returning wrong results. The compare covers
+    // the WHOLE bundle (`Resources.equals`: every column, the classes and
+    // the version): two builds from the same ontology rows differ in the
+    // trie and payloads alone when only commonWords changes. Fast path: all
+    // production bundles are lazy-val singletons (eq); the column compare
+    // only runs for rebuilt bundles.
+    require(cachedRes == res,
       s"broadcastResources: version '${res.version}' already cached for a " +
         "DIFFERENT Resources bundle — give each distinct bundle a distinct version")
     bc

@@ -31,11 +31,8 @@ object DictionaryLinking {
     * resource version, like the reference's disk-cached tf-idf matrices). */
   final class LinkingIndexes(res: Resources) {
     val byParser: Map[String, SynonymTfIdfIndex] =
-      res.synonyms.keys.map(_._1).toSeq.distinct.sorted.map { parser =>
-        val syns = res.synonyms.collect {
-          case ((p, _), c) if p == parser => c.synonymNorm
-        }.toSeq
-        parser -> SynonymTfIdfIndex.fit(syns)
+      res.candidateParsers.map { parser =>
+        parser -> SynonymTfIdfIndex.fit(res.candidatesOf(parser).map(res.candidateSynNorm))
       }.toMap
     val parsersByClass: Map[String, Seq[String]] =
       res.entityClassOf.toSeq.groupBy(_._2)

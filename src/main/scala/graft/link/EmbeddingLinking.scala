@@ -32,10 +32,9 @@ object EmbeddingLinking {
       res: Resources,
       embedder: Similarity.Embedder
   ): SynonymEmbeddings = {
-    val byParser = res.synonyms.keys.groupBy(_._1)
-    val syns = byParser.map { case (p, ks) =>
-      p -> ks.map(_._2).toArray.sorted
-    }
+    val syns = res.candidateParsers.map { p =>
+      p -> res.candidatesOf(p).map(res.candidateSynNorm).toArray
+    }.toMap
     new SynonymEmbeddings(
       syns,
       syns.map { case (p, ss) => p -> ss.map(embedder.embed) },

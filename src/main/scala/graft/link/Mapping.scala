@@ -244,8 +244,8 @@ final class AnnotationLevelDisambiguation(val confidence: String)
     var bestSets = Set.empty[EquivalentIdSet]
     idSets.toSeq.sortBy(_.ids.headOption.map(_.idx).getOrElse("")).foreach { idSet =>
       idSet.ids.foreach { id =>
-        val score = res.resources.metadata.get((parserName, id.idx))
-          .flatMap(_.extras.get("annotation_score")).map(_.toInt).getOrElse(0)
+        val score = res.resources.metadataExtra(parserName, id.idx, "annotation_score")
+          .map(_.toInt).getOrElse(0)
         if (score > best) { best = score; bestSets = Set(idSet) }
         else if (score == best) bestSets += idSet
       }
@@ -263,10 +263,8 @@ final class PreferDefaultLabelMatch(val confidence: String)
       idSets: Set[EquivalentIdSet], doc: DocWork, parserName: String,
       entMatch: String, entMatchNorm: String): Set[EquivalentIdSet] = {
     val res = MappingResources.current.get()
-    val entityClass = res.resources.entityClassOf.getOrElse(parserName, "unknown")
     val kept = idSets.flatMap(_.ids).filter { id =>
-      Normalizer.normalize(res.resources.defaultLabel(parserName, id.idx),
-        entityClass) == entMatchNorm
+      res.normalizedDefaultLabel(parserName, id.idx) == entMatchNorm
     }
     if (kept.isEmpty) Set.empty
     else Set(EquivalentIdSet(kept.toSeq).canonical)
@@ -512,10 +510,8 @@ final class StrongMatchWithEmbeddingConfirmation(
   */
 final class MappingResources(val resources: Resources) extends Serializable {
   @transient lazy val contextVectorizers: Map[String, TfIdfVectorizer] = {
-    resources.synonyms.keys.map(_._1).toSeq.distinct.sorted.map { parser =>
-      val syns = resources.synonyms.collect {
-        case ((p, _), c) if p == parser => c.synonymNorm
-      }.toSeq.sorted
+    resources.candidateParsers.map { parser =>
+      val syns = resources.candidatesOf(parser).map(resources.candidateSynNorm)
       parser -> TfIdfVectorizer.fit(syns, Featurizer.contextFeatures)
     }.toMap
   }
@@ -523,9 +519,10 @@ final class MappingResources(val resources: Resources) extends Serializable {
     contextVectorizers.get(parser)
 
   @transient lazy val idToSyns: Map[(String, String), Seq[(String, String)]] =
-    resources.synonyms.values.toSeq
-      .flatMap(c => c.associatedIdSets.flatMap(_.ids).map(id =>
-        (c.parserName, id.idx) -> (c.synonymNorm, c.aggregatedBy)))
+    (0 until resources.candidateCount)
+      .flatMap(c => resources.candidateIdxs(c).map(idx =>
+        (resources.candidateParser(c), idx) ->
+          (resources.candidateSynNorm(c), resources.candidateAggregatedBy(c))))
       .groupBy(_._1)
       .map { case (k, vs) => k -> vs.map(_._2).distinct.sorted }
 
@@ -537,15 +534,33 @@ final class MappingResources(val resources: Resources) extends Serializable {
     * reference (context_scoring.py contexts json) filled from the
     * ontology's own text, since no external context asset exists here. */
   @transient lazy val gildaScorer: GildaScorer = {
-    val ctxs = resources.synonyms.values.toSeq
-      .flatMap(c => c.associatedIdSets.flatMap(_.ids).map(id =>
-        (c.parserName, id.idx) -> c.rawSynonyms))
+    val ctxs = (0 until resources.candidateCount)
+      .flatMap(c => resources.candidateIdxs(c).map(idx =>
+        (resources.candidateParser(c), idx) -> resources.candidateRawSynonyms(c)))
       .groupBy(_._1)
       .map { case ((p, idx), vs) =>
         val label = resources.defaultLabel(p, idx)
         (p, idx) -> (label +: vs.flatMap(_._2).distinct.sorted).mkString(" ")
       }
     GildaScorer.forContexts(ctxs)
+  }
+
+  /** Each id's default label normalized under its parser's class, filled
+    * on first use per metadata row — the result depends only on
+    * (parser, idx), and disambiguation asks for it once per candidate id. */
+  @transient private lazy val normalizedLabels =
+    new java.util.concurrent.atomic.AtomicReferenceArray[String](resources.metadataCount)
+
+  def normalizedDefaultLabel(parser: String, idx: String): String = {
+    def normalize = Normalizer.normalize(resources.defaultLabel(parser, idx),
+      resources.entityClassOf.getOrElse(parser, "unknown"))
+    val m = resources.metadataRow(parser, idx)
+    if (m < 0) normalize
+    else {
+      var label = normalizedLabels.get(m)
+      if (label == null) { label = normalize; normalizedLabels.set(m, label) }
+      label
+    }
   }
 }
 

@@ -1,7 +1,7 @@
 package graft.ner
 
 import graft.model._
-import graft.index.{GazPayload, Resources}
+import graft.index.Resources
 import graft.text.Tokenizer
 
 /** Token-based joint NER + linking — the explosion/spaCy matcher step (ref
@@ -30,7 +30,7 @@ object ExplosionMatcher {
 
   private final class Node {
     val next = new java.util.HashMap[String, Node]()
-    var hits: List[GazPayload] = Nil
+    var hits: List[Int] = Nil // payload rows
   }
 
   /** Two token tries: strict (original-case tokens) and lowercase.
@@ -41,7 +41,7 @@ object ExplosionMatcher {
     private[ExplosionMatcher] val strict = new Node
     private[ExplosionMatcher] val lower = new Node
 
-    private def insert(root: Node, tokens: Seq[String], p: GazPayload): Unit = {
+    private def insert(root: Node, tokens: Seq[String], p: Int): Unit = {
       var n = root
       tokens.foreach { t =>
         var c = n.next.get(t)
@@ -51,16 +51,16 @@ object ExplosionMatcher {
       n.hits ::= p
     }
 
-    res.payloads.foreach(_.foreach { p =>
-      val surface = p.originalCase
+    (0 until res.payloadCount).foreach { p =>
+      val surface = res.payloadOriginalCase(p)
       val toks = Tokenizer.tokenize(surface)
         .map(t => surface.substring(t.start, t.end))
       if (toks.nonEmpty) {
-        if (p.caseSensitive) insert(strict, toks.toSeq, p)
+        if (res.payloadCaseSensitive(p)) insert(strict, toks.toSeq, p)
         else insert(lower,
           toks.map(_.toLowerCase(java.util.Locale.ROOT)).toSeq, p)
       }
-    })
+    }
   }
 
   private val jvmCache =
@@ -78,13 +78,14 @@ object ExplosionMatcher {
     val norm = orth.map(_.toLowerCase(java.util.Locale.ROOT))
     // (startChar, endChar) → class → contributing payload+parser pairs
     val grouped = scala.collection.mutable.LinkedHashMap
-      .empty[(Int, Int), scala.collection.mutable.LinkedHashMap[String, List[(GazPayload, String)]]]
-    def emit(i: Int, j: Int, p: GazPayload): Unit = {
+      .empty[(Int, Int), scala.collection.mutable.LinkedHashMap[String, List[(Int, String)]]]
+    def emit(i: Int, j: Int, p: Int): Unit = {
       val span = (toks(i).start, toks(j).end)
       val byClass = grouped.getOrElseUpdate(span,
         scala.collection.mutable.LinkedHashMap.empty)
-      byClass(p.entityClass) =
-        p.parserNames.toList.map(pn => (p, pn)) ::: byClass.getOrElse(p.entityClass, Nil)
+      val cls = res.payloadClass(p)
+      byClass(cls) = (res.payloadParserStart(p) until res.payloadParserEnd(p)).toList
+        .map(j => (p, res.payloadParser(j))) ::: byClass.getOrElse(cls, Nil)
     }
     def scan(root: Node, words: IndexedSeq[String]): Unit = {
       var i = 0
@@ -109,7 +110,7 @@ object ExplosionMatcher {
       byClass.iterator.map { case (cls, contribs) =>
         val matchStr = text.substring(s, e)
         val cands = contribs
-          .map { case (p, parser) => (parser, p.synNorm) }.distinct.sorted
+          .map { case (p, parser) => (parser, res.payloadSynNorm(p)) }.distinct.sorted
           .flatMap { case (parser, synNorm) =>
             res.candidate(parser, synNorm).map(c =>
               CandidateWithMetrics(c, LinkingMetrics(exactMatch = Some(true))))
@@ -119,7 +120,7 @@ object ExplosionMatcher {
           entityClass = cls,
           spans = Seq(CharSpan(s, e)),
           namespace = Namespace,
-          mentionConfidence = contribs.map(_._1.mentionConfidence).max,
+          mentionConfidence = contribs.map(c => res.payloadConfidence(c._1)).max,
           matchNorm = graft.text.Normalizer.normalize(matchStr, cls),
           candidates = cands)
       }

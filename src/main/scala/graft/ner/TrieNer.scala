@@ -26,32 +26,29 @@ object TrieNer {
       val startIdx = endIdx - key.length + 1
       if (Tokenizer.wordIsValid(startIdx, endIdx, starts, ends)) {
         val matchedText = text.substring(startIdx, endIdx + 1)
-        // group payload entries by entity class (sorted ⇒ deterministic)
-        val byClass = res.payloads(keyIdx).groupBy(_.entityClass)
-        byClass.keys.toSeq.sorted.foreach { cls =>
-          val entries = byClass(cls)
-          var candidates = List.empty[CandidateWithMetrics]
-          var seen = Set.empty[(String, String)]
-          // per-parser max confidence (ref :118-149)
-          val parserConf = scala.collection.mutable.Map.empty[String, Int]
-          entries.foreach { e =>
-            val caseOk = !e.caseSensitive || matchedText == e.originalCase
+        // the key's payloads are sorted by class: one mention per class run
+        val last = res.payloadEnd(keyIdx)
+        var p = res.payloadStart(keyIdx)
+        while (p < last) {
+          val cls = res.payloadClass(p)
+          // candidate rows are in (parser, synNorm) order; per-parser max
+          // confidence (ref :118-149) is the max over the case-matching
+          // payloads, each of which has at least one parser
+          val rows = scala.collection.mutable.SortedSet.empty[Int]
+          var conf = Int.MinValue
+          while (p < last && res.payloadClass(p) == cls) {
+            val caseOk = !res.payloadCaseSensitive(p) || matchedText == res.payloadOriginalCase(p)
             if (caseOk) {
-              e.parserNames.foreach { p =>
-                parserConf.updateWith(p)(old =>
-                  Some(math.max(old.getOrElse(0), e.mentionConfidence)))
-                if (!seen((p, e.synNorm))) {
-                  seen += ((p, e.synNorm))
-                  res.candidate(p, e.synNorm).foreach { c =>
-                    candidates ::= CandidateWithMetrics(c,
-                      LinkingMetrics(exactMatch = Some(true)))
-                  }
-                }
+              conf = math.max(conf, res.payloadConfidence(p))
+              var j = res.payloadParserStart(p)
+              while (j < res.payloadParserEnd(p)) {
+                if (res.payloadCandidate(j) >= 0) rows += res.payloadCandidate(j)
+                j += 1
               }
             }
+            p += 1
           }
-          if (candidates.nonEmpty) {
-            val conf = parserConf.values.max
+          if (rows.nonEmpty) {
             out += Mention(
               matchStr = matchedText,
               entityClass = cls,
@@ -59,8 +56,8 @@ object TrieNer {
               namespace = Namespace,
               mentionConfidence = conf,
               matchNorm = Normalizer.normalize(matchedText, cls),
-              candidates = candidates.reverse
-                .sortBy(c => (c.candidate.parserName, c.candidate.synonymNorm))
+              candidates = rows.toList.map(c => CandidateWithMetrics(res.candidateAt(c),
+                LinkingMetrics(exactMatch = Some(true))))
             )
           }
         }

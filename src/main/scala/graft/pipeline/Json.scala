@@ -33,10 +33,15 @@ import graft.model._
   *    written, in either timestamp form (microseconds, or the milliseconds
   *    older hand-offs carry); a timestamp without an offset is read in the
   *    session time zone;
-  *  - a field the schema marks nullable may be missing or `null` and
-  *    decodes to `null` / `None`; at the top level a missing or `null`
-  *    `warcTs`, `text`, `lang` or `sections` becomes the epoch, `""`, `""`
-  *    or no sections; unknown fields are skipped;
+  *  - an array field (`sections`, `entities`, `sentenceSpans`, `spans`,
+  *    `candidates`, `mappings`, `rawSynonyms`, `mappingTypes`,
+  *    `associatedIdSets`, `ids`) may be missing or `null` and decodes to an
+  *    empty `List`: no step writes a null sequence, and a hand-off that
+  *    leaves out an empty array must still link;
+  *  - any other field the schema marks nullable may be missing or `null`
+  *    and decodes to `null` / `None`; at the top level a missing or `null`
+  *    `warcTs`, `text` or `lang` becomes the epoch, `""` or `""`; unknown
+  *    fields are skipped;
   *  - any other line (not JSON, a missing `url`, a missing or `null`
   *    number or boolean, a value of the wrong type, an unparseable
   *    timestamp, trailing content) becomes a failed-doc row keyed by the
@@ -44,8 +49,9 @@ import graft.model._
   *    `read_json: corrupt json line`, epoch timestamp, empty text, lang and
   *    sections — failures are rows, never task aborts.
   * `JsonFuzzSpec` ties the decoder to the encoder schema: it writes random
-  * rows of `schema` and compares every line with the `from_json` reference,
-  * so a model field the decoder does not read fails it.
+  * rows of `schema` and compares every line with the `from_json` reference
+  * (its null arrays read as empty ones), so a model field the decoder does
+  * not read fails it.
   */
 object Json {
 
@@ -118,12 +124,15 @@ object Json {
     private def required[A <: AnyRef](v: A): A = if (v == null) fail() else v
 
     /** A `List`, the collection Spark's deserializer builds, so the steps
-      * downstream see the same shapes as from a row-based source. */
-    private def seq[A >: Null](elem: => A): Seq[A] = nullable {
-      if (p.currentToken != START_ARRAY) fail()
-      val b = List.newBuilder[A]
-      while (p.nextToken() != END_ARRAY) b += nullable(elem)
-      b.result()
+      * downstream see the same shapes as from a row-based source; `null`
+      * is the empty list, as a missing array is. */
+    private def seq[A >: Null](elem: => A): Seq[A] = p.currentToken match {
+      case VALUE_NULL => Nil
+      case START_ARRAY =>
+        val b = List.newBuilder[A]
+        while (p.nextToken() != END_ARRAY) b += nullable(elem)
+        b.result()
+      case _ => fail()
     }
 
     private def str(): String = p.currentToken match {
@@ -166,7 +175,7 @@ object Json {
     private def doc(): KDoc = {
       var url, text, lang: String = null
       var warcTs: Timestamp = null
-      var sections: Seq[Section] = null
+      var sections: Seq[Section] = Nil
       var error: Option[String] = None
       fields {
         case "url" => url = str()
@@ -179,13 +188,13 @@ object Json {
       }
       KDoc(required(url), if (warcTs == null) new Timestamp(0L) else warcTs,
         if (text == null) "" else text, if (lang == null) "" else lang,
-        if (sections == null) Seq.empty else sections, error)
+        sections, error)
     }
 
     private def section(): Section = {
       var name, text: String = null
-      var entities: Seq[Mention] = null
-      var sentenceSpans: Seq[CharSpan] = null
+      var entities: Seq[Mention] = Nil
+      var sentenceSpans: Seq[CharSpan] = Nil
       fields {
         case "name" => name = str()
         case "text" => text = str()
@@ -208,10 +217,10 @@ object Json {
 
     private def mention(): Mention = {
       var matchStr, entityClass, namespace, matchNorm: String = null
-      var spans: Seq[CharSpan] = null
+      var spans: Seq[CharSpan] = Nil
       var mentionConfidence: Integer = null
-      var candidates: Seq[CandidateWithMetrics] = null
-      var mappings: Seq[Mapping] = null
+      var candidates: Seq[CandidateWithMetrics] = Nil
+      var mappings: Seq[Mapping] = Nil
       fields {
         case "matchStr" => matchStr = str()
         case "entityClass" => entityClass = str()
@@ -240,9 +249,9 @@ object Json {
 
     private def linkingCandidate(): LinkingCandidate = {
       var parserName, synonymNorm, aggregatedBy: String = null
-      var rawSynonyms, mappingTypes: Seq[String] = null
+      var rawSynonyms, mappingTypes: Seq[String] = Nil
       var isSymbolic: java.lang.Boolean = null
-      var associatedIdSets: Seq[EquivalentIdSet] = null
+      var associatedIdSets: Seq[EquivalentIdSet] = Nil
       fields {
         case "parserName" => parserName = str()
         case "synonymNorm" => synonymNorm = str()
@@ -258,7 +267,7 @@ object Json {
     }
 
     private def equivalentIdSet(): EquivalentIdSet = {
-      var ids: Seq[IdAndSource] = null
+      var ids: Seq[IdAndSource] = Nil
       fields {
         case "ids" => ids = seq(idAndSource())
         case _ => p.skipChildren()

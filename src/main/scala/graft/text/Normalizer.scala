@@ -32,9 +32,11 @@ object Normalizer {
 
   private val Root = java.util.Locale.ROOT
 
+  private val Whitespace = Pattern.compile("(?U)\\s+")
+
   /** Python `" ".join(s.upper().split())` */
   private def collapseUpper(s: String): String =
-    s.toUpperCase(Root).split("(?U)\\s+").filter(_.nonEmpty).mkString(" ")
+    Whitespace.split(s.toUpperCase(Root)).filter(_.nonEmpty).mkString(" ")
 
   // --- GREEK_SUBS (language_phenomena.py:1-54), insertion order preserved --
 
@@ -90,6 +92,7 @@ object Normalizer {
       Pattern.compile("(?U)\\sB\\s|\\sB$|^B\\s") -> " BETA "
     )
     private val numberSplit = Pattern.compile("(?U)(\\d+)")
+    private val outerWhitespace = Pattern.compile("(?U)^\\s+|\\s+$")
 
     /** Upper/lower + numeric/alpha ratio heuristic
       * (string_normalizer.py:80-120). */
@@ -156,7 +159,7 @@ object Normalizer {
       }
       parts += s.substring(last)
       // python str.strip() strips Unicode whitespace; Java trim only <= U+0020
-      parts.map(_.replaceAll("(?U)^\\s+|\\s+$", "")).mkString(" ")
+      parts.map(outerWhitespace.matcher(_).replaceAll("")).mkString(" ")
     }
 
     def replaceSubstrings(s: String): String = {

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model._
 import graft.index.Resources
 import graft.link._
-import graft.ontology.OntologyRow
+import graft.ontology.{OntologyRow, ResourceBuild}
 import graft.text.Normalizer
 
 /** Port of the reference's p27 disambiguation scenarios
@@ -92,12 +92,13 @@ class DisambiguationScenarioSpec extends AnyFunSuite {
 
   test("AnnotationLevel: higher prior wins; ties keep both") {
     def resWithScores(scores: Map[String, Int]): Unit = {
-      val meta = res.metadata.map { case (k, m) =>
-        k -> m.copy(extras = m.extras ++ scores.get(m.idx).map(s =>
+      val (cands, metadata) = ResourceBuild.buildCandidates(rows)
+      val meta = metadata.map { m =>
+        m.copy(extras = m.extras ++ scores.get(m.idx).map(s =>
           "annotation_score" -> s.toString))
       }
-      val res2 = new Resources(res.trie, res.payloads, res.synonyms, meta,
-        res.entityClassOf, res.version + scores.hashCode)
+      val res2 = Resources.assemble(res.entityClassOf, cands, meta,
+        ResourceBuild.defaultResources(cands, _ => "gene"), res.version + scores.hashCode)
       MappingResources.current.set(MappingResources.forResources(res2))
     }
     val strategy = new AnnotationLevelDisambiguation(DisambiguationConfidence.Possible)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.model.KDoc
+import graft.model.{KDoc, LinkingCandidate, Mention}
 import graft.pipeline.Json
 
 /** The `from_json` decoder that `Json.fromJson` replaced, kept as the
@@ -52,7 +52,7 @@ class JsonFuzzSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val ds = ls.toDS()
     val got = Json.fromJson(spark, ds).collect()
-    val want = JsonReference.fromJson(spark, ds).collect()
+    val want = JsonReference.fromJson(spark, ds).collect().map(emptyArrays)
     assert(got.length == ls.length && want.length == ls.length)
     ls.indices.foreach { i =>
       assert(want(i).error.forall(!_.startsWith("read_json")), ls(i))
@@ -113,6 +113,24 @@ object JsonFuzzSpec {
       if (nullable) seen += path -> isNull
       if (isNull) null else value(t, path)
     }
+  }
+
+  /** A reference row with its null arrays read as empty ones: the decoder
+    * reads a missing or `null` array as an empty list. */
+  def emptyArrays(d: KDoc): KDoc = {
+    def seq[A <: AnyRef](s: Seq[A])(f: A => A): Seq[A] =
+      if (s == null) Nil else s.map(a => if (a == null) a else f(a))
+    def candidate(c: LinkingCandidate) = c.copy(
+      rawSynonyms = seq(c.rawSynonyms)(identity),
+      mappingTypes = seq(c.mappingTypes)(identity),
+      associatedIdSets = seq(c.associatedIdSets)(s => s.copy(ids = seq(s.ids)(identity))))
+    def mention(m: Mention) = m.copy(
+      spans = seq(m.spans)(identity),
+      candidates = seq(m.candidates)(cm =>
+        if (cm.candidate == null) cm else cm.copy(candidate = candidate(cm.candidate))),
+      mappings = seq(m.mappings)(identity))
+    d.copy(sections = seq(d.sections)(s => s.copy(
+      entities = seq(s.entities)(mention), sentenceSpans = seq(s.sentenceSpans)(identity))))
   }
 
   /** Structural equality that compares doubles by bits, so NaN equals NaN. */

@@ -93,6 +93,31 @@ class AhoCorasickSpec extends AnyFunSuite {
       assert(got == expected, s"keys=${keys.mkString(",")} text=$text")
     }
   }
+
+  test("build gives the arrays of the sorted-map-per-node reference build") {
+    import graft.index.AhoCorasickReference
+    // shared prefixes over a small alphabet, one-char keys and non-BMP
+    // characters (two chars each); given order and sorted order, and a
+    // repeated key (the last index wins in both)
+    val alphabet = Vector("a", "b", "c", "é", "中", "😀", "𐐷", " ")
+    def same(keys: Array[String]): Unit = {
+      val got = AhoCorasickReference.arrays(AhoCorasick.build(keys))
+      val want = AhoCorasickReference.arrays(AhoCorasickReference.build(keys))
+      assert(got.lazyZip(want).forall(java.util.Objects.deepEquals),
+        s"keys=${keys.mkString("|")}")
+    }
+    for (seed <- 1 to 60) {
+      val rnd = new scala.util.Random(seed)
+      val keys = (0 until 1 + rnd.nextInt(40)).map(_ =>
+        Seq.fill(1 + rnd.nextInt(if (seed % 3 == 0) 2 else 7))(
+          alphabet(rnd.nextInt(alphabet.size))).mkString).distinct.toArray
+      same(keys)
+      same(keys.sorted)
+    }
+    same(Array("a", "b", "ab", "a"))
+    same(Array("😀", "\ud83d", "x😀y", "é"))
+    same(graft.TfIdfScaleProbe.synonyms(7L, 2000).map(_.toLowerCase(java.util.Locale.ROOT)))
+  }
 }
 
 class SimilaritySpec extends AnyFunSuite {

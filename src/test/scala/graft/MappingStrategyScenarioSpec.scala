@@ -42,7 +42,7 @@ class MappingStrategyScenarioSpec extends AnyFunSuite {
 
   private def allCandidates(metrics: LinkingCandidate => LinkingMetrics)
       : Seq[CandidateWithMetrics] =
-    res.synonyms.collect { case ((p, _), c) if p == P => c }.toSeq
+    res.candidatesOf(P).map(res.candidateAt)
       .sortBy(_.synonymNorm)
       .map(c => CandidateWithMetrics(c, metrics(c)))
 
@@ -129,8 +129,8 @@ class MappingStrategyScenarioSpec extends AnyFunSuite {
     bind(diseaseRes)
     for ((ent, targetToken) <- Seq(
         ("Neck disease", "NECK"), ("Heck disease", "HECK"))) {
-      val cands = diseaseRes.synonyms.collect { case ((p, _), c) if p == P => c }
-        .toSeq.sortBy(_.synonymNorm)
+      val cands = diseaseRes.candidatesOf(P).map(diseaseRes.candidateAt)
+        .sortBy(_.synonymNorm)
         .map(c => CandidateWithMetrics(c, LinkingMetrics(searchScore = Some(95.0))))
       val targets = cands.map(_.candidate).filter(_.synonymNorm.contains(targetToken))
       assert(targets.nonEmpty)

@@ -497,6 +497,32 @@ class FusedLineageSpec extends AnyFunSuite with SparkTestBase {
     val roundTripped = back.filter(_.error.isEmpty).map(_.url).toSet
     assert(roundTripped == docs.collect().map(_.url).toSet + "https://y")
   }
+
+  test("a hand-off line that leaves out its empty arrays links like the full line") {
+    import spark.implicits._
+    val norm = graft.text.Normalizer.normalize("hash join", "operator")
+    val full = """{"url":"https://z","warcTs":"2023-01-01T00:00:00.000Z",""" +
+      """"sections":[{"name":"body","text":"hash join","entities":[{"matchStr":"hash join",""" +
+      """"entityClass":"operator","spans":[{"start":0,"end":9}],"namespace":"t",""" +
+      s""""mentionConfidence":50,"matchNorm":"$norm","candidates":[],"mappings":[]}],""" +
+      """"sentenceSpans":[]}]}"""
+    val lean = full.replace(""","candidates":[],"mappings":[]""", "")
+      .replace(""","sentenceSpans":[]""", "")
+    val nulls = full.replace(""""candidates":[]""", """"candidates":null""")
+      .replace(""""sentenceSpans":[]""", """"sentenceSpans":null""")
+    assert(!lean.contains("candidates") && !lean.contains("sentenceSpans") &&
+      nulls.contains("\"sentenceSpans\":null"))
+    val res = spark.sparkContext.broadcast(Resources.corpus)
+    def triples(line: String) = {
+      val linked = graft.pipeline.Json.fromJson(spark, Seq(line).toDS())
+        .mapPartitions(it => Pipeline.linkingStages(res.value)(it)).collect()
+      assert(linked.forall(_.error.isEmpty), linked.flatMap(_.error).mkString)
+      linked.toSeq.flatMap(Triples.fromDoc).toSet
+    }
+    val want = triples(full)
+    assert(want.exists(_.url == "https://z"))
+    assert(triples(lean) == want && triples(nulls) == want)
+  }
 }
 
 /** Failure isolation per step: each named step in turn throws on one doc.
