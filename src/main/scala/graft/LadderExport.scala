@@ -89,7 +89,7 @@ object LadderExport {
     }
 
     // ---- fitted context vectorizers (the TfIdf disambiguation model) -------
-    val mres = new MappingResources(res)
+    val mres = MappingResources.forResources(res)
     val vecs = root.putObject("vectorizers")
     mres.contextVectorizers.toSeq.sortBy(_._1).foreach { case (parser, v) =>
       val vn = vecs.putObject(parser)

@@ -19,17 +19,19 @@ object SparkEntry {
 
   // ---- shared helpers -----------------------------------------------------
 
-  /** Broadcast memo per (application, resource version): resources are
+  /** Broadcast memo per (application, bundle): resources are
     * write-once/read-many, so re-broadcasting the bundle (trie + payloads +
-    * synonym/metadata maps, the reference's model-pack analogue) on every
-    * query call would re-serialize and re-ship megabytes per run — on a
-    * 1000-executor cluster that is a full fleet re-distribution per query,
+    * candidate/metadata columns, the reference's model-pack analogue) on
+    * every query call would re-serialize and re-ship megabytes per run — on
+    * a 1000-executor cluster that is a full fleet re-distribution per query,
     * and in the bench it was the prime suspect for a phantom per-run
-    * regression. Keyed by applicationId so a fresh session never reuses a
-    * dead context's broadcast. */
+    * regression. The bundle itself is the key (`Resources.equals`: every
+    * column, the classes and the version; the production bundles are
+    * lazy-val singletons, so the lookup is an `eq`), so a different bundle
+    * always gets its own broadcast. Keyed by applicationId so a fresh
+    * session never reuses a dead context's broadcast. */
   private val bcCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String),
-    (org.apache.spark.broadcast.Broadcast[Resources], Resources)]()
+    (String, Resources), org.apache.spark.broadcast.Broadcast[Resources]]()
   private val bcEvictionHooked =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private[graft] def broadcastResources(spark: SparkSession, res: Resources) = {
@@ -45,21 +47,7 @@ object SparkEntry {
           bcEvictionHooked.remove(appId)
         }
       })
-    val (bc, cachedRes) =
-      bcCache.computeIfAbsent((appId, res.version), _ => (spark.sparkContext.broadcast(res), res))
-    // the version string is the cache identity: a DIFFERENT bundle arriving
-    // under an already-cached version (e.g. Resources.build left at its
-    // default version) would silently execute against the cached bundle —
-    // fail loudly instead of returning wrong results. The compare covers
-    // the WHOLE bundle (`Resources.equals`: every column, the classes and
-    // the version): two builds from the same ontology rows differ in the
-    // trie and payloads alone when only commonWords changes. Fast path: all
-    // production bundles are lazy-val singletons (eq); the column compare
-    // only runs for rebuilt bundles.
-    require(cachedRes == res,
-      s"broadcastResources: version '${res.version}' already cached for a " +
-        "DIFFERENT Resources bundle — give each distinct bundle a distinct version")
-    bc
+    bcCache.computeIfAbsent((appId, res), _ => spark.sparkContext.broadcast(res))
   }
 
   private def resources(spark: SparkSession) =

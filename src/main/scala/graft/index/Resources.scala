@@ -39,6 +39,14 @@ import graft.ontology._
   * loses the per-row object, tuple-key and collection headers.
   * `candidateAt` still hands out a shared [[LinkingCandidate]], built on
   * first use per row per JVM into a transient slot array.
+  *
+  * Derived state (fuzzy indexes, mapping vectorizers, token matchers,
+  * synonym embeddings) lives and dies with the bundle instance, built once
+  * per instance through [[derived]]. Ship the bundle to tasks only by
+  * broadcast, read by `bc.value` inside the task: an executor's tasks then
+  * share one instance, while a closure-captured bundle is a fresh copy per
+  * task that refits everything. `version` is only a label for lineage and
+  * equality; nothing is keyed by it.
   */
 final class Resources private (
     val trie: AhoCorasick,
@@ -136,6 +144,14 @@ final class Resources private (
     probe(candIndex, candParser, candSynNorm, strings, parser, synNorm)
 
   @transient private lazy val slots = new AtomicReferenceArray[LinkingCandidate](candidateCount)
+
+  @transient private lazy val memo = new java.util.concurrent.ConcurrentHashMap[AnyRef, AnyRef]()
+
+  /** The state `key` names, built from this instance at most once (concurrent
+    * callers wait). `build` must not call `derived`: `computeIfAbsent`
+    * forbids recursive updates. */
+  private[graft] def derived[T <: AnyRef](key: AnyRef)(build: => T): T =
+    memo.computeIfAbsent(key, _ => build).asInstanceOf[T]
 
   /** Candidate row c as a shared value, built on its first use in this JVM. */
   def candidateAt(c: Int): LinkingCandidate = {

@@ -10,7 +10,7 @@ import scala.collection.mutable
   *
   * Formulae match sklearn defaults: tf = raw count, idf = ln((1+n)/(1+df))+1
   * (smooth), l2-normalized vectors. The synonym index is fitted once per
-  * parser per executor JVM, on first use (`DictionaryLinking.indexesFor`),
+  * parser per bundle instance, on first use (`DictionaryLinking.indexesFor`),
   * not in the resource build, so the broadcast bundle carries no vectors;
   * per-row scoring is a sparse dot product — the "similarity theta-join" of
   * SURVEY.md §2.G executed map-side.

@@ -27,8 +27,9 @@ object DictionaryLinking {
   val SkipNamespaces: Set[String] =
     Set(graft.ner.TrieNer.Namespace, graft.ner.ExplosionMatcher.Namespace)
 
-  /** Executor-pinned per-parser fuzzy indexes (built once per JVM per
-    * resource version, like the reference's disk-cached tf-idf matrices). */
+  /** Per-parser fuzzy indexes, fitted once per bundle instance (an
+    * executor's copy of the broadcast), like the reference's disk-cached
+    * tf-idf matrices. */
   final class LinkingIndexes(res: Resources) {
     val byParser: Map[String, SynonymTfIdfIndex] =
       res.candidateParsers.map { parser =>
@@ -39,10 +40,8 @@ object DictionaryLinking {
         .map { case (cls, ps) => cls -> ps.map(_._1).sorted }
   }
 
-  private val jvmCache =
-    new java.util.concurrent.ConcurrentHashMap[String, LinkingIndexes]()
   def indexesFor(res: Resources): LinkingIndexes =
-    jvmCache.computeIfAbsent(res.version, _ => new LinkingIndexes(res))
+    res.derived(DictionaryLinking)(new LinkingIndexes(res))
 
   def search(
       res: Resources,

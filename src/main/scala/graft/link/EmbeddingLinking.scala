@@ -9,9 +9,9 @@ import graft.text.Similarity
   * string_similarity_scorers.py:94-133; BASELINE "SapBERT-style embedding
   * entity linking").
   *
-  * Shape: ontology-side synonym embeddings are precomputed ONCE per resource
-  * version on the driver (production: an offline Spark job writing an
-  * embeddings table, refreshed with the ontology) and broadcast; mention
+  * Shape: ontology-side synonym embeddings are computed once per (bundle
+  * instance, embedder), on first use in a task (production: an offline Spark
+  * job writing an embeddings table, refreshed with the ontology); mention
   * embeddings are computed batched inside mapPartitions with an
   * executor-pinned encoder session; candidate generation is top-k cosine.
   * The encoder is the pluggable [[Similarity.Embedder]] (deterministic
@@ -42,17 +42,13 @@ object EmbeddingLinking {
         .map { case (cls, ps) => cls -> ps.map(_._1).sorted })
   }
 
-  private val jvmCache =
-    new java.util.concurrent.ConcurrentHashMap[String, SynonymEmbeddings]()
-
   /** Attach embedding-similarity candidates (embedScore) to entities that
     * still have no candidates after exact + fuzzy linking. */
   def processPartition(
       res: Resources,
       embedder: Similarity.Embedder = graft.ner.MiniBernEmbedder
   )(docs: Iterator[KDoc]): Iterator[KDoc] = {
-    val emb = jvmCache.computeIfAbsent(res.version,
-      _ => buildSynonymEmbeddings(res, embedder))
+    val emb = res.derived((EmbeddingLinking, embedder))(buildSynonymEmbeddings(res, embedder))
     val cache = scala.collection.mutable.HashMap.empty[(String, String), Seq[CandidateWithMetrics]]
     def lookup(matchNorm: String, entityClass: String): Seq[CandidateWithMetrics] =
       cache.getOrElseUpdate((matchNorm, entityClass), {

@@ -11,7 +11,9 @@ import scala.collection.mutable
   * keeps this state on shared step instances and resets it per document
   * (strategy_runner.py:148-159); in Spark the config objects are broadcast
   * and immutable, and mutable state lives in [[ExecState]]/[[DocWork]]
-  * created per row, so concurrent tasks cannot interfere.
+  * created per row, so concurrent tasks cannot interfere. Each
+  * [[DocWork]] carries the [[MappingResources]] of the bundle it is mapped
+  * against, and the strategies read them from there.
   */
 
 /** Mutable working view of one mention during mapping. */
@@ -31,7 +33,8 @@ final class MentionWork(val m: Mention) {
 }
 
 /** Mutable working view of one document during mapping. */
-final class DocWork(val doc: KDoc, val works: Array[Array[MentionWork]]) {
+final class DocWork(val doc: KDoc, val works: Array[Array[MentionWork]],
+    val resources: MappingResources) {
   def allMentions: Iterator[MentionWork] = works.iterator.flatMap(_.iterator)
   /** Both pre-existing mappings on the entity (from earlier steps) and ones
     * created during this run — the reference reads `entity.mappings`, which
@@ -56,8 +59,9 @@ final class DocWork(val doc: KDoc, val works: Array[Array[MentionWork]]) {
 }
 
 object DocWork {
-  def apply(doc: KDoc): DocWork =
-    new DocWork(doc, doc.sections.map(_.entities.map(new MentionWork(_)).toArray).toArray)
+  def apply(doc: KDoc, resources: MappingResources): DocWork =
+    new DocWork(doc, doc.sections.map(_.entities.map(new MentionWork(_)).toArray).toArray,
+      resources)
 
   /** Write accumulated mappings back into an immutable document. */
   def reassemble(w: DocWork): KDoc =
@@ -126,7 +130,7 @@ final class TfIdfContextDisambiguation(
   def disambiguate(
       idSets: Set[EquivalentIdSet], doc: DocWork, parserName: String,
       entMatch: String, entMatchNorm: String): Set[EquivalentIdSet] = {
-    val res = MappingResources.current.get()
+    val res = doc.resources
     val vectorizer = res.contextVectorizer(parserName).getOrElse(return Set.empty)
     val docVec = doc.docVector(parserName, vectorizer)
     // syn → id sets it belongs to, via unambiguous-ish synonyms of each id
@@ -197,7 +201,7 @@ final class GildaTfIdfDisambiguation(
   def disambiguate(
       idSets: Set[EquivalentIdSet], doc: DocWork, parserName: String,
       entMatch: String, entMatchNorm: String): Set[EquivalentIdSet] = {
-    val scorer = explicitScorer.getOrElse(MappingResources.current.get().gildaScorer)
+    val scorer = explicitScorer.getOrElse(doc.resources.gildaScorer)
     val docVec = doc.rawDocVector(scorer)
     val idxToSets = mutable.HashMap.empty[String, Set[EquivalentIdSet]]
     idSets.foreach(s => s.ids.foreach { id =>
@@ -239,12 +243,11 @@ final class AnnotationLevelDisambiguation(val confidence: String)
   def disambiguate(
       idSets: Set[EquivalentIdSet], doc: DocWork, parserName: String,
       entMatch: String, entMatchNorm: String): Set[EquivalentIdSet] = {
-    val res = MappingResources.current.get()
     var best = 0
     var bestSets = Set.empty[EquivalentIdSet]
     idSets.toSeq.sortBy(_.ids.headOption.map(_.idx).getOrElse("")).foreach { idSet =>
       idSet.ids.foreach { id =>
-        val score = res.resources.metadataExtra(parserName, id.idx, "annotation_score")
+        val score = doc.resources.resources.metadataExtra(parserName, id.idx, "annotation_score")
           .map(_.toInt).getOrElse(0)
         if (score > best) { best = score; bestSets = Set(idSet) }
         else if (score == best) bestSets += idSet
@@ -262,9 +265,8 @@ final class PreferDefaultLabelMatch(val confidence: String)
   def disambiguate(
       idSets: Set[EquivalentIdSet], doc: DocWork, parserName: String,
       entMatch: String, entMatchNorm: String): Set[EquivalentIdSet] = {
-    val res = MappingResources.current.get()
     val kept = idSets.flatMap(_.ids).filter { id =>
-      res.normalizedDefaultLabel(parserName, id.idx) == entMatchNorm
+      doc.resources.normalizedDefaultLabel(parserName, id.idx) == entMatchNorm
     }
     if (kept.isEmpty) Set.empty
     else Set(EquivalentIdSet(kept.toSeq).canonical)
@@ -281,9 +283,9 @@ final class PreferNearestEmbeddingToDefaultLabel(
   def disambiguate(
       idSets: Set[EquivalentIdSet], doc: DocWork, parserName: String,
       entMatch: String, entMatchNorm: String): Set[EquivalentIdSet] = {
-    val res = MappingResources.current.get()
+    val labels = doc.resources.resources
     val scored = idSets.flatMap(_.ids).toSeq
-      .map(id => (id, scorer.score(entMatch, res.resources.defaultLabel(parserName, id.idx))))
+      .map(id => (id, scorer.score(entMatch, labels.defaultLabel(parserName, id.idx))))
     if (scored.isEmpty) return Set.empty
     val best = scored.map(_._2).max
     Set(EquivalentIdSet(scored.filter(_._2 == best).map(_._1)).canonical)
@@ -297,6 +299,7 @@ final class PreferNearestEmbeddingToDefaultLabel(
 object MappingFactory {
   /** id sets → Mapping rows with metadata lookups (ref strategies.py:21-105). */
   def fromIdSets(
+      res: MappingResources,
       idSets: Iterable[EquivalentIdSet],
       parserName: String,
       stringMatchStrategy: String,
@@ -304,7 +307,6 @@ object MappingFactory {
       disambiguationStrategy: Option[String],
       disambiguationConfidence: Option[String]
   ): Seq[Mapping] = {
-    val res = MappingResources.current.get()
     idSets.toSeq.sortBy(_.ids.headOption.map(i => (i.idx, i.source)).getOrElse(("", "")))
       .flatMap(_.ids.map { id =>
         Mapping(
@@ -377,7 +379,7 @@ abstract class MappingStrategy extends Serializable {
     else {
       val (idSets, disambStrategy, disambConfidence) =
         disambiguateIfRequired(filtered, doc, parserName, entMatch, entMatchNorm)
-      MappingFactory.fromIdSets(idSets, parserName, name, confidence,
+      MappingFactory.fromIdSets(doc.resources, idSets, parserName, name, confidence,
         disambStrategy, disambConfidence)
     }
   }
@@ -504,12 +506,12 @@ final class StrongMatchWithEmbeddingConfirmation(
 // ---------------------------------------------------------------------------
 
 /** Wraps [[Resources]] with the derived indexes the mapping plane needs
-  * (context vectorizers per parser, id→synonyms). Built once per executor
-  * from the broadcast Resources; exposed to strategy objects through a
-  * thread-safe holder so strategy configs stay serializable values.
+  * (context vectorizers per parser, id→synonyms). Built once per bundle
+  * instance ([[MappingResources.forResources]]) and handed to the strategies
+  * in each [[DocWork]], so strategy configs stay serializable values.
   */
-final class MappingResources(val resources: Resources) extends Serializable {
-  @transient lazy val contextVectorizers: Map[String, TfIdfVectorizer] = {
+final class MappingResources(val resources: Resources) {
+  lazy val contextVectorizers: Map[String, TfIdfVectorizer] = {
     resources.candidateParsers.map { parser =>
       val syns = resources.candidatesOf(parser).map(resources.candidateSynNorm)
       parser -> TfIdfVectorizer.fit(syns, Featurizer.contextFeatures)
@@ -518,7 +520,7 @@ final class MappingResources(val resources: Resources) extends Serializable {
   def contextVectorizer(parser: String): Option[TfIdfVectorizer] =
     contextVectorizers.get(parser)
 
-  @transient lazy val idToSyns: Map[(String, String), Seq[(String, String)]] =
+  lazy val idToSyns: Map[(String, String), Seq[(String, String)]] =
     (0 until resources.candidateCount)
       .flatMap(c => resources.candidateIdxs(c).map(idx =>
         (resources.candidateParser(c), idx) ->
@@ -533,7 +535,7 @@ final class MappingResources(val resources: Resources) extends Serializable {
     * label + all its raw synonyms — the wiki-description slot of the
     * reference (context_scoring.py contexts json) filled from the
     * ontology's own text, since no external context asset exists here. */
-  @transient lazy val gildaScorer: GildaScorer = {
+  lazy val gildaScorer: GildaScorer = {
     val ctxs = (0 until resources.candidateCount)
       .flatMap(c => resources.candidateIdxs(c).map(idx =>
         (resources.candidateParser(c), idx) -> resources.candidateRawSynonyms(c)))
@@ -548,7 +550,7 @@ final class MappingResources(val resources: Resources) extends Serializable {
   /** Each id's default label normalized under its parser's class, filled
     * on first use per metadata row — the result depends only on
     * (parser, idx), and disambiguation asks for it once per candidate id. */
-  @transient private lazy val normalizedLabels =
+  private lazy val normalizedLabels =
     new java.util.concurrent.atomic.AtomicReferenceArray[String](resources.metadataCount)
 
   def normalizedDefaultLabel(parser: String, idx: String): String = {
@@ -565,14 +567,9 @@ final class MappingResources(val resources: Resources) extends Serializable {
 }
 
 object MappingResources {
-  /** Task-local binding, set by the MappingStep around each partition. */
-  val current: ThreadLocal[MappingResources] = new ThreadLocal
-
-  /** Executor-pinned cache (one fit of the context vectorizers per JVM per
-    * resource version — the Spark analogue of the reference's singleton
-    * TfIdfScorer, context_scoring.py:49-69). */
-  private val jvmCache =
-    new java.util.concurrent.ConcurrentHashMap[String, MappingResources]()
+  /** One fit of the context vectorizers per bundle instance — the Spark
+    * analogue of the reference's singleton TfIdfScorer,
+    * context_scoring.py:49-69. */
   def forResources(res: Resources): MappingResources =
-    jvmCache.computeIfAbsent(res.version, _ => new MappingResources(res))
+    res.derived(MappingResources)(new MappingResources(res))
 }

@@ -71,8 +71,8 @@ final case class StrategyRunner(
     nonSymbolicStrategies: Map[Int, ConfidenceLevelExecution]
 ) extends Serializable {
 
-  def process(doc: KDoc): KDoc = {
-    val work = DocWork(doc)
+  def process(doc: KDoc, resources: MappingResources): KDoc = {
+    val work = DocWork(doc, resources)
     // sort by (-confidence, entityKey) — ref strategy_runner.py:250-260
     val sorted = work.allMentions.toArray.sortBy(w =>
       (-w.m.mentionConfidence, w.entityKey))
@@ -278,8 +278,8 @@ object Ladders {
   }
 }
 
-/** The MappingStep stage: binds the task-local MappingResources and runs the
-  * strategy fold per document (ref mapping_step.py:13-27). */
+/** The MappingStep stage: runs the strategy fold per document against the
+  * bundle's MappingResources (ref mapping_step.py:13-27). */
 object MappingStep {
   def processPartition(
       resources: Resources,
@@ -287,10 +287,9 @@ object MappingStep {
   )(docs: Iterator[KDoc]): Iterator[KDoc] =
     docs.map(open(resources, runner))
 
-  /** Bind the task-local MappingResources for this thread and return the
-    * per-document mapping function. */
+  /** The per-document mapping function over `resources`' MappingResources. */
   def open(resources: Resources, runner: StrategyRunner): KDoc => KDoc = {
-    MappingResources.current.set(MappingResources.forResources(resources))
-    doc => if (doc.error.isDefined) doc else runner.process(doc)
+    val mres = MappingResources.forResources(resources)
+    doc => if (doc.error.isDefined) doc else runner.process(doc, mres)
   }
 }

@@ -14,8 +14,8 @@ import graft.text.Tokenizer
   * with mention confidence = max over the contributing synonyms.
   *
   * Re-expression: two token-sequence tries over [[Tokenizer]] tokens (the
-  * PhraseMatcher is exactly a token-trie scan), built once per JVM per
-  * resource version from the same broadcast [[Resources]] bundle the char
+  * PhraseMatcher is exactly a token-trie scan), built once per bundle
+  * instance from the same broadcast [[Resources]] bundle the char
   * trie uses. In the reference's default pipeline this step is superseded
   * by the memory-efficient char automaton (our C1 [[TrieNer]]); both
   * implement the same gazetteer semantics, and ExplosionMatcherSpec
@@ -34,8 +34,8 @@ object ExplosionMatcher {
   }
 
   /** Two token tries: strict (original-case tokens) and lowercase.
-    * Deliberately NOT Serializable: the trie is rebuilt per executor JVM via
-    * [[matchersFor]] (from the broadcast Resources), never shipped in a
+    * Deliberately NOT Serializable: the trie is rebuilt per bundle instance
+    * via [[matchersFor]] (from the broadcast Resources), never shipped in a
     * closure — Node is a plain mutable HashMap trie. */
   final class Matchers(res: Resources) {
     private[ExplosionMatcher] val strict = new Node
@@ -63,10 +63,8 @@ object ExplosionMatcher {
     }
   }
 
-  private val jvmCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Matchers]()
   def matchersFor(res: Resources): Matchers =
-    jvmCache.computeIfAbsent(res.version, _ => new Matchers(res))
+    res.derived(ExplosionMatcher)(new Matchers(res))
 
   /** All gazetteer matches of a section text as entities with linking
     * candidates attached — one entity per (span, entity class), confidence

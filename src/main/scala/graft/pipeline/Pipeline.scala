@@ -34,7 +34,6 @@ object Pipeline {
       checkpointDir: Option[String] = None,
       resume: Boolean = false,
       runId: String = "run-0",
-      resourceVersion: String = "synthetic-ontology/1",
       // opt-in int8 transformer inference (the reference's quantization
       // plane, kazu/quantization/ — enabled via pipeline config there too)
       int8Transformer: Boolean = false
@@ -49,6 +48,7 @@ object Pipeline {
   final class Run(
       spark: SparkSession,
       cfg: Config,
+      resourceVersion: String,
       val lineage: scala.collection.mutable.ArrayBuffer[LineageRow]
   ) {
     import spark.implicits._
@@ -104,7 +104,7 @@ object Pipeline {
             }
           counts.foreach { case (pid, n, fails) =>
             lineage += LineageRow(name, pid, s"$vPath/part-$pid",
-              cfg.resourceVersion, cfg.modelVersion,
+              resourceVersion, cfg.modelVersion,
               rowsIn = n, rowsOut = n, failures = fails,
               wallMs = if (resumed) 0L else wall, runId = cfg.runId)
           }
@@ -139,7 +139,7 @@ object Pipeline {
 
   /** One named document step. `open` runs once per partition (or server
     * request) and returns the per-document function; it holds the
-    * per-partition state: the dictionary-lookup cache, the task-local
+    * per-partition state: the dictionary-lookup cache, the bundle's
     * mapping resources, the transformer session. */
   final case class Step(name: String, open: () => KDoc => KDoc)
 
@@ -303,6 +303,7 @@ object Pipeline {
         pages.repartition(parallelism, org.apache.spark.sql.functions.col("url"))
       else pages
     val docs = Pages.toDocs(spark, pagesBalanced)
+    val resourceVersion = resources.value.version // read on the driver
 
     if (cfg.checkpointDir.isEmpty) {
       // fused fast path: extract + every step in one mapPartitions — one
@@ -315,7 +316,6 @@ object Pipeline {
       // tracked in a CollectionAccumulator and surface as lineage rows once
       // an action has run (counts reflect tasks executed so far).
       val acc = spark.sparkContext.collectionAccumulator[(Int, Long, Long)]("graft-lineage")
-      val resourceVersion = cfg.resourceVersion
       val out = docs.mapPartitions(it =>
         countedPartition(acc)(mapDocs(stepsOf(resources.value))(it)))
       // a view: materializes rows whenever accessed, so lineage read AFTER
@@ -334,7 +334,7 @@ object Pipeline {
     }
 
     // checkpointed: one snapshot per step, named after it
-    val runCtx = new Run(spark, cfg, scala.collection.mutable.ArrayBuffer.empty)
+    val runCtx = new Run(spark, cfg, resourceVersion, scala.collection.mutable.ArrayBuffer.empty)
     val out = stepsOf(resources.value).map(_.name)
       .foldLeft(runCtx.stage("extract", docs)) { (ds, name) =>
         runCtx.stage(name, ds.mapPartitions(it =>

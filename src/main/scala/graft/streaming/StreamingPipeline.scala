@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.broadcast.Broadcast
 import graft.model._
 import graft.index.Resources
 import graft.pipeline.Pipeline
@@ -26,15 +27,16 @@ object StreamingPipeline {
     spark.readStream.schema(pageSchema).parquet(dir)
 
   /** Continuous triples: identical per-doc logic as the batch pipeline —
-    * stateless, so streaming-safe. */
+    * stateless, so streaming-safe. The bundle is read from its broadcast
+    * inside the task, so all tasks of an executor share its indexes. */
   def triplesStream(
       spark: SparkSession,
       pages: DataFrame,
-      resources: Resources
+      resources: Broadcast[Resources]
   ): Dataset[Triple] = {
     import spark.implicits._
     val docs = graft.pipeline.Pages.toDocs(spark, pages)
-      .mapPartitions(it => Pipeline.mapDocs(Pipeline.steps(resources))(it))
+      .mapPartitions(it => Pipeline.mapDocs(Pipeline.steps(resources.value))(it))
     graft.triples.Triples.fromDocs(spark, docs)
   }
 
@@ -42,7 +44,7 @@ object StreamingPipeline {
   def mentionRates(
       spark: SparkSession,
       pages: DataFrame,
-      resources: Resources,
+      resources: Broadcast[Resources],
       window_ : String = "1 minute",
       watermark: String = "2 minutes"
   ): DataFrame = {
@@ -53,7 +55,7 @@ object StreamingPipeline {
     // are watermarked with a time-range join condition (neither held here:
     // every page and triple ever seen would be retained)
     val docs = graft.pipeline.Pages.toDocs(spark, pages)
-      .mapPartitions(it => Pipeline.mapDocs(Pipeline.steps(resources))(it))
+      .mapPartitions(it => Pipeline.mapDocs(Pipeline.steps(resources.value))(it))
     docs.flatMap(d => graft.triples.Triples.fromDoc(d).map(t => (t.pred, d.warcTs)))
       .toDF("pred", "warc_ts")
       .withWatermark("warc_ts", watermark)

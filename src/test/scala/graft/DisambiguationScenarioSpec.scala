@@ -22,7 +22,7 @@ class DisambiguationScenarioSpec extends AnyFunSuite {
     OntologyRow(P, "gene", "3", "Autoantigen p27", "Autoantigen p27", "test"),
     OntologyRow(P, "gene", "3", "Autoantigen p27", "p27", "test"))
   private val res = Resources.build(rows, _ => "gene", version = "p27/1")
-  MappingResources.current.set(MappingResources.forResources(res))
+  private val mres = MappingResources.forResources(res)
 
   private val p27Norm = Normalizer.normalize("p27", "gene")
   private val cdkn1bNorm = Normalizer.normalize("CDKN1B", "gene")
@@ -39,9 +39,11 @@ class DisambiguationScenarioSpec extends AnyFunSuite {
     Mention(m, cls, Seq(CharSpan(start, start + m.length)), "test", 50,
       Normalizer.normalize(m, cls), candidates = cands, mappings = mappings)
 
-  private def work(ms: Mention*): DocWork =
+  private def work(ms: Mention*): DocWork = workIn(mres)(ms: _*)
+
+  private def workIn(r: MappingResources)(ms: Mention*): DocWork =
     DocWork(KDoc("u", new java.sql.Timestamp(0), "text", "en",
-      Seq(Section("s", "text", ms.toSeq))))
+      Seq(Section("s", "text", ms.toSeq))), r)
 
   test("p27 candidate is genuinely ambiguous (3 id sets)") {
     assert(p27IdSets.size == 3)
@@ -57,7 +59,7 @@ class DisambiguationScenarioSpec extends AnyFunSuite {
     // the autoantigen mention is mapped to id 3 (built through
     // MappingFactory, as the reference does) → p27 resolves to {3}
     def factoryMapping(idx: String): Mapping =
-      MappingFactory.fromIdSets(
+      MappingFactory.fromIdSets(mres,
         res.candidate(P, if (idx == "3") autoNorm else cdkn1bNorm).get
           .associatedIdSets.filter(_.ids.exists(_.idx == idx)),
         P, "test", StringMatchConfidence.HighlyLikely, None, None).head
@@ -91,7 +93,7 @@ class DisambiguationScenarioSpec extends AnyFunSuite {
   }
 
   test("AnnotationLevel: higher prior wins; ties keep both") {
-    def resWithScores(scores: Map[String, Int]): Unit = {
+    def resWithScores(scores: Map[String, Int]): MappingResources = {
       val (cands, metadata) = ResourceBuild.buildCandidates(rows)
       val meta = metadata.map { m =>
         m.copy(extras = m.extras ++ scores.get(m.idx).map(s =>
@@ -99,20 +101,18 @@ class DisambiguationScenarioSpec extends AnyFunSuite {
       }
       val res2 = Resources.assemble(res.entityClassOf, cands, meta,
         ResourceBuild.defaultResources(cands, _ => "gene"), res.version + scores.hashCode)
-      MappingResources.current.set(MappingResources.forResources(res2))
+      MappingResources.forResources(res2)
     }
     val strategy = new AnnotationLevelDisambiguation(DisambiguationConfidence.Possible)
-    val w = work(mention("CDKN1B", "gene", 48, Seq(cand(cdkn1bNorm))))
+    def w(r: MappingResources) = workIn(r)(mention("CDKN1B", "gene", 48, Seq(cand(cdkn1bNorm))))
 
-    resWithScores(Map("1" -> 10, "2" -> 5, "3" -> 5))
-    val r1 = strategy(p27IdSets, w, P, "CDKN1B", cdkn1bNorm)
+    val w1 = w(resWithScores(Map("1" -> 10, "2" -> 5, "3" -> 5)))
+    val r1 = strategy(p27IdSets, w1, P, "CDKN1B", cdkn1bNorm)
     assert(r1.map(_.ids.map(_.idx).toSet) == Set(Set("1")))
 
-    resWithScores(Map("1" -> 10, "2" -> 5, "3" -> 10))
-    val r2 = strategy(p27IdSets, w, P, "CDKN1B", cdkn1bNorm)
+    val w2 = w(resWithScores(Map("1" -> 10, "2" -> 5, "3" -> 10)))
+    val r2 = strategy(p27IdSets, w2, P, "CDKN1B", cdkn1bNorm)
     assert(r2.map(_.ids.map(_.idx).toSet) == Set(Set("1"), Set("3")))
-
-    MappingResources.current.set(MappingResources.forResources(res))
   }
 
   test("GildaTfIdf: wiki-style context resolves p27 to id 1; delta rule fails ties") {
@@ -146,7 +146,7 @@ class DisambiguationScenarioSpec extends AnyFunSuite {
     val w = DocWork(KDoc("u", new java.sql.Timestamp(0), text, "en",
       Seq(Section("s", text, Seq(
         mention("p27", "gene", 0, Seq(cand(p27Norm))),
-        mention("CDKN1B", "gene", text.length - 6, Seq.empty))))))
+        mention("CDKN1B", "gene", text.length - 6, Seq.empty))))), mres)
     val r = strategy(p27IdSets, w, P, "p27", p27Norm)
     assert(r.map(_.ids.map(_.idx).toSet) == Set(Set("1")), r)
 

@@ -30,7 +30,6 @@ class GoldenPipelineSpec extends AnyFunSuite {
   private def runPipeline(text: String): KDoc = {
     val d0 = KDoc("doc://g", new java.sql.Timestamp(0), text, "en",
       Seq(Section("body", text)))
-    MappingResources.current.set(MappingResources.forResources(res))
     val ner = TrieNer.processDoc(res)(d0)
     val mapped = MappingStep.processPartition(res, Ladders.default)(Iterator(ner)).next()
     MergeOverlaps.processDoc(MergeOverlaps.Config())(
@@ -82,7 +81,7 @@ class StreamingRatesSpec extends AnyFunSuite with SparkTestBase {
       .limit(40).write.mode("overwrite").parquet(dir)
     val pages = graft.streaming.StreamingPipeline.pagesStream(spark, dir)
     val rates = graft.streaming.StreamingPipeline.mentionRates(
-      spark, pages, Resources.corpus)
+      spark, pages, spark.sparkContext.broadcast(Resources.corpus))
     val q = rates.writeStream
       .format("memory").queryName("rates_stream")
       .outputMode("append")

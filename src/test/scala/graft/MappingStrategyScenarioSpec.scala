@@ -35,20 +35,18 @@ class MappingStrategyScenarioSpec extends AnyFunSuite {
 
   private def norm(s: String) = Normalizer.normalize(s, "test")
 
-  // MappingFactory reads the task-local resource binding (as the mapping
-  // step sets it around each partition)
-  private def bind(r: Resources): Unit =
-    MappingResources.current.set(MappingResources.forResources(r))
-
   private def allCandidates(metrics: LinkingCandidate => LinkingMetrics)
       : Seq[CandidateWithMetrics] =
     res.candidatesOf(P).map(res.candidateAt)
       .sortBy(_.synonymNorm)
       .map(c => CandidateWithMetrics(c, metrics(c)))
 
-  private def work(text: String, m: String, cls: String): DocWork =
+  // MappingFactory reads the doc's MappingResources (as the mapping step
+  // passes them in)
+  private def work(text: String, m: String, cls: String, r: Resources = res): DocWork =
     DocWork(KDoc("u", new java.sql.Timestamp(0), text, "en", Seq(Section("s", text,
-      Seq(Mention(m, cls, Seq(CharSpan(0, m.length)), "test", 50, norm(m)))))))
+      Seq(Mention(m, cls, Seq(CharSpan(0, m.length)), "test", 50, norm(m)))))),
+      MappingResources.forResources(r))
 
   /** check_correct_candidates_selected (test_mapping_strategies.py:54-72):
     * symmetric difference of candidate id sets vs mapping ids is empty. */
@@ -61,7 +59,6 @@ class MappingStrategyScenarioSpec extends AnyFunSuite {
   }
 
   test("ExactMatchMappingStrategy: the exact-match candidate's ids, all of them") {
-    bind(res)
     val target = res.candidate(P, norm("p27")).get
     val cands = allCandidates(c =>
       LinkingMetrics(exactMatch = Some(c.synonymNorm == target.synonymNorm)))
@@ -73,7 +70,6 @@ class MappingStrategyScenarioSpec extends AnyFunSuite {
   }
 
   test("SymbolMatchMappingStrategy: PAK-2p27 selects the PAK-2p27 candidate") {
-    bind(res)
     val target = res.candidate(P, norm("PAK-2p27")).get
     val cands = allCandidates(_ => LinkingMetrics())
     val strategy = new SymbolMatchMapping(StringMatchConfidence.HighlyLikely)
@@ -83,7 +79,6 @@ class MappingStrategyScenarioSpec extends AnyFunSuite {
   }
 
   test("SynNormIsSubStringMappingStrategy: 'CDKN1B gene' selects CDKN1B") {
-    bind(res)
     val target = res.candidate(P, norm("CDKN1B")).get
     val cands = allCandidates(_ => LinkingMetrics())
     val strategy = new SynNormIsSubStringMapping(StringMatchConfidence.HighlyLikely)
@@ -96,7 +91,6 @@ class MappingStrategyScenarioSpec extends AnyFunSuite {
     "the top-scored group; (85, 15) keeps the 88-scored group too") {
     // deterministic analog of the reference's sort_then_group enumeration:
     // the CDKN1B synonym group scores 100, the PAK2 group 88, the rest 70
-    bind(res)
     val s100 = res.candidate(P, norm("CDKN1B")).get
     val s88 = res.candidate(P, norm("PAK2")).get
     def score(c: LinkingCandidate): Double =
@@ -126,7 +120,6 @@ class MappingStrategyScenarioSpec extends AnyFunSuite {
 
   test("StrongMatchWithEmbeddingConfirmation: the embedding disambiguates " +
     "Heck vs Neck disease (real encoder inference)") {
-    bind(diseaseRes)
     for ((ent, targetToken) <- Seq(
         ("Neck disease", "NECK"), ("Heck disease", "HECK"))) {
       val cands = diseaseRes.candidatesOf(P).map(diseaseRes.candidateAt)
@@ -145,7 +138,7 @@ class MappingStrategyScenarioSpec extends AnyFunSuite {
         searchThreshold = 90.0, differential = 0.0,
         embeddingThreshold = 0.85)
       val mappings = strategy(ent, Normalizer.normalize(ent, "disease"),
-        work(s"$ent is often confused", ent, "disease"), cands)
+        work(s"$ent is often confused", ent, "disease", diseaseRes), cands)
       checkSelected(targets, mappings)
     }
   }

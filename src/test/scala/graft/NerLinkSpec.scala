@@ -36,7 +36,6 @@ class NerLinkSpec extends AnyFunSuite {
   }
 
   private def mapped(text: String): KDoc = {
-    MappingResources.current.set(MappingResources.forResources(res))
     MappingStep.processPartition(res, Ladders.default)(Iterator(doc(text))).next()
   }
 
@@ -131,7 +130,6 @@ class FuzzyLinkingSpec extends AnyFunSuite {
     assert(best.metrics.exactMatch.contains(false))
 
     // full mapping run: StrongMatch fires on the high fuzzy score
-    MappingResources.current.set(MappingResources.forResources(res))
     val mapped = MappingStep.processPartition(res, Ladders.default)(
       Iterator(linked)).next()
     assert(mapped.entities.head.mappings.map(_.idx) == Seq("D:1"))

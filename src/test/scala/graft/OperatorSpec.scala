@@ -331,6 +331,24 @@ class EmbeddingLinkingSpec extends AnyFunSuite {
     val out = EmbeddingLinking.processPartition(res)(Iterator(d)).next()
     assert(out.entities.head.candidates == Seq(cand))
   }
+
+  test("a second embedder on the same bundle scores against its own synonym vectors") {
+    val e = Mention("influenzas", "disease", Seq(CharSpan(0, 10)), "ModelNer", 50, "INFLUENZA")
+    val d = KDoc("u", new java.sql.Timestamp(0), "influenzas", "en",
+      Seq(Section("s", "influenzas", Seq(e))))
+    def scores(embedder: graft.text.Similarity.Embedder) =
+      EmbeddingLinking.processPartition(res, embedder)(Iterator(d)).next()
+        .entities.head.candidates.map(c => c.candidate.synonymNorm -> c.metrics.embedScore.get)
+    assert(scores(graft.ner.MiniBernEmbedder).head._1 == "INFLUENZA")
+    // one vector for every string: every synonym scores 1.0
+    val constant = new graft.text.Similarity.Embedder {
+      private val v = graft.ner.MiniBernEmbedder.embed("constant")
+      def embed(s: String): Array[Float] = v
+    }
+    val got = scores(constant)
+    assert(got.map(_._1) == Seq("INFLUENZA", "MEASLE"))
+    assert(got.forall(_._2 > 0.9999), got)
+  }
 }
 
 class CurationSpec extends org.scalatest.funsuite.AnyFunSuite {

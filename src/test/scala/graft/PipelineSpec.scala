@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.index.Resources
 import graft.model._
+import graft.ontology.CorpusOntology
 import graft.pipeline.{Pages, Pipeline}
 import graft.triples.Triples
 import graft.eval.Acceptance
@@ -122,6 +123,22 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(expired == Seq(0L))
     assert(graft.pipeline.Snapshots.allVersions(fs, mappingTable) == Seq(1L))
     assert(graft.pipeline.Snapshots.currentVersion(fs, mappingTable).contains(1L))
+  }
+
+  test("lineage carries the version of the bundle the run used") {
+    val probe = Resources.build(CorpusOntology.rows, CorpusOntology.entityClassOf,
+      CorpusOntology.CommonWords, version = "lineage-probe/1")
+    val res = spark.sparkContext.broadcast(probe)
+    val pages = Pages.fromDocuments(spark, sfDir).limit(20)
+    val (fused, fusedLineage) = Pipeline.run(spark, pages, res, withTransformerNer = false)
+    fused.count()
+    val dir = java.nio.file.Files.createTempDirectory("graft-lineage").toString
+    val (_, ckptLineage) = Pipeline.run(spark, pages, res, withTransformerNer = false,
+      cfg = Pipeline.Config(checkpointDir = Some(s"file:$dir")))
+    for (lineage <- Seq(fusedLineage, ckptLineage)) {
+      assert(lineage.nonEmpty)
+      assert(lineage.forall(_.resourceVersion == "lineage-probe/1"), lineage)
+    }
   }
 
   test("fused and staged execution paths produce identical triples") {

@@ -95,7 +95,6 @@ class StrategyRunnerScenarioSpec extends AnyFunSuite {
     val rows = Seq(P1, P2).flatMap(p => Seq("first", "second", "third").map(i =>
       OntologyRow(p, "test_class", i, i, i, "test")))
     val res = Resources.build(rows, _ => "test_class", version = "runner-scenario/1")
-    MappingResources.current.set(MappingResources.forResources(res))
 
     val HL = MentionConfidence.HighlyLikely
     val PR = MentionConfidence.Probable
@@ -114,7 +113,7 @@ class StrategyRunnerScenarioSpec extends AnyFunSuite {
         ent("test_default", "unknown", PR, "group_default", 0, p1h2, p2h2),
         ent("test_default", "unknown", PR, "group_default", 15, p1h2, p2h2)))))
 
-    val out = runner.process(doc)
+    val out = runner.process(doc, MappingResources.forResources(res))
     def group(m: String) = out.entities.filter(_.matchStr == m)
 
     // group 1: single candidate, first strategy fires → 1 mapping ("first")

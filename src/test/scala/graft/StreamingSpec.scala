@@ -18,7 +18,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
     val pages = StreamingPipeline.pagesStream(spark, dir)
     assert(pages.isStreaming)
-    val triples = StreamingPipeline.triplesStream(spark, pages, Resources.corpus)
+    val triples = StreamingPipeline.triplesStream(spark, pages,
+      spark.sparkContext.broadcast(Resources.corpus))
     val q = triples.writeStream
       .format("memory").queryName("triples_stream")
       .outputMode("append")
