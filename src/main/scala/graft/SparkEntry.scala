@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.index.Resources
 import graft.ontology.CorpusOntology
 import graft.pipeline.{Pages, Pipeline}
 import graft.triples.Triples
 import graft.tdp.{Ann, Dedup, Multimodal, TextStats}
+import graft.util.CacheRegistry
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -19,7 +21,7 @@ object SparkEntry {
 
   // ---- shared helpers -----------------------------------------------------
 
-  /** Broadcast memo per (application, bundle): resources are
+  /** The bundle's broadcast, memoized per (session, bundle): resources are
     * write-once/read-many, so re-broadcasting the bundle (trie + payloads +
     * candidate/metadata columns, the reference's model-pack analogue) on
     * every query call would re-serialize and re-ship megabytes per run — on
@@ -28,27 +30,9 @@ object SparkEntry {
     * regression. The bundle itself is the key (`Resources.equals`: every
     * column, the classes and the version; the production bundles are
     * lazy-val singletons, so the lookup is an `eq`), so a different bundle
-    * always gets its own broadcast. Keyed by applicationId so a fresh
-    * session never reuses a dead context's broadcast. */
-  private val bcCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Resources), org.apache.spark.broadcast.Broadcast[Resources]]()
-  private val bcEvictionHooked =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[graft] def broadcastResources(spark: SparkSession, res: Resources) = {
-    val appId = spark.sparkContext.applicationId
-    // evict this application's entries when it ends — a long-lived JVM
-    // cycling sessions must not accumulate dead Broadcast handles (each
-    // pins trie + payload megabytes), mirroring ensureEvictionHook below
-    if (bcEvictionHooked.add(appId))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-          bcCache.keySet.removeIf(_._1 == appId)
-          bcEvictionHooked.remove(appId)
-        }
-      })
-    bcCache.computeIfAbsent((appId, res), _ => spark.sparkContext.broadcast(res))
-  }
+    * always gets its own broadcast. */
+  private[graft] def broadcastResources(spark: SparkSession, res: Resources) =
+    CacheRegistry.memo(spark, res)(spark.sparkContext.broadcast(res))
 
   private def resources(spark: SparkSession) =
     broadcastResources(spark, Resources.corpus)
@@ -61,120 +45,38 @@ object SparkEntry {
     * transformer inference) a second time, and the several kg_* queries of
     * one Verify/Bench session share a single materialization instead of
     * each holding its own corpus-sized cache until session end. */
-  private val docsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      org.apache.spark.sql.Dataset[graft.model.KDoc]]
-  /** Assembled (subj, pred, obj) triples, memoized per (session, dir) like
-    * [[docsCache]]. The pipeline docs are persisted but the assembly flatMap
-    * over them is not — so before round 4, each of kg_triples /
-    * kg_triples_agg / kg_graph_stats / kg_cooccurrence re-ran the assembly.
-    * At 100 TB the production shape is write-once/read-many (the pipeline
-    * publishes a triples snapshot and the aggregates read it); in the
-    * driver-run queries this persist is that snapshot's stand-in. */
-  private val triplesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  /** Triples from the trie-only pipeline variant (withTransformerNer =
-    * false) — the "previous crawl's pipeline" side of the corpus×corpus
-    * acceptance comparison, memoized like [[triplesCache]]. */
-  private val trieTriplesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  /** Sessions that already carry the eviction listener (below). */
-  private val evictionHooked =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
-  /** Bounded session-keyed memoize shared by the doc and triples caches:
-    * hard cap at 8 entries — sessions sharing one context (newSession
-    * clones) never see onApplicationEnd, so the excess is evicted (and
-    * unpersisted) before inserting regardless of lifecycle. Insertion order
-    * is tracked explicitly (per-cache FIFO queue under one lock) so
-    * eviction removes the OLDEST entries — a TrieMap's `keys.take` is
-    * hash-order and could evict the entry another live session is mid-query
-    * on (recompute hit, not what "evict the excess" intends). */
-  private val memoLock = new Object
-  private val memoOrder =
-    scala.collection.mutable.HashMap.empty[AnyRef,
-      scala.collection.mutable.ArrayDeque[(SparkSession, String)]]
-  private def boundedMemo[V <: org.apache.spark.sql.Dataset[_]](
-      cache: scala.collection.concurrent.TrieMap[(SparkSession, String), V],
-      key: (SparkSession, String))(build: => V): V = {
-    cache.get(key) match {
-      case Some(v) => v
-      case None =>
-        // build OUTSIDE the lock: plan construction (and the lazy resource
-        // index it may touch) must not serialize unrelated sessions or the
-        // listener-bus app-end handler; a racing duplicate simply loses and
-        // unpersists its never-observed dataset
-        val v = build
-        memoLock.synchronized {
-          val order = memoOrder.getOrElseUpdate(cache,
-            scala.collection.mutable.ArrayDeque.empty)
-          cache.get(key) match {
-            case Some(w) => v.unpersist(); w
-            case None =>
-              while (cache.size >= 8 && order.nonEmpty) {
-                val oldest = order.removeHead()
-                cache.remove(oldest).foreach(_.unpersist())
-              }
-              cache.put(key, v)
-              order.append(key)
-              v
-          }
-        }
-    }
-  }
-
-  /** Evict a session's entries from EVERY memo cache when its application
-    * ends, so a long-lived process that creates many sessions doesn't
-    * strongly retain stopped sessions and their persisted datasets for the
-    * JVM lifetime. Installed by every memoized entry point (not just
-    * pipelineDocs) so no cache relies on another method having run first. */
-  private def ensureEvictionHook(spark: SparkSession): Unit =
-    if (evictionHooked.add(spark))
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          memoLock.synchronized {
-            docsCache.filterInPlace { case ((s, _), _) => s ne spark }
-            triplesCache.filterInPlace { case ((s, _), _) => s ne spark }
-            trieTriplesCache.filterInPlace { case ((s, _), _) => s ne spark }
-            memoOrder.values.foreach(_.filterInPlace { case (s, _) => s ne spark })
-            evictionHooked.remove(spark)
-          }
-      })
-
-  private def pipelineDocs(spark: SparkSession, sfDir: String) = {
-    ensureEvictionHook(spark)
-    boundedMemo(docsCache, (spark, sfDir)) {
+  private def pipelineDocs(spark: SparkSession, sfDir: String) =
+    CacheRegistry.memo(spark, ("pipelineDocs", sfDir)) {
       val pages = Pages.fromDocuments(spark, sfDir)
       val (docs, _) = Pipeline.run(spark, pages, resources(spark))
-      docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      docs.persist(StorageLevel.MEMORY_AND_DISK)
     }
-  }
 
   /** One triple-assembly pass per (session, dir): every triple-derived query
     * (dump, agg, graph stats, co-occurrence) reads this persisted table
-    * instead of re-running the assembly flatMap — the read-many shape the
-    * published snapshot has in production. */
+    * instead of re-running the assembly flatMap over the persisted docs.
+    * At 100 TB the production shape is write-once/read-many (the pipeline
+    * publishes a triples snapshot and the aggregates read it); in the
+    * driver-run queries this persist is that snapshot's stand-in. */
   private def pipelineTriples(spark: SparkSession, sfDir: String): DataFrame =
-    boundedMemo(triplesCache, (spark, sfDir)) {
+    CacheRegistry.memo(spark, ("pipelineTriples", sfDir)) {
       Triples.fromDocs(spark, pipelineDocs(spark, sfDir)).toDF()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     }
 
-  /** One trie-only pipeline pass per (session, dir): the comparison
-    * baseline for kg_acceptance_corpus. Much cheaper than the full
-    * pipeline (no transformer inference) and read by every bench repeat of
-    * the comparison row, so it persists exactly like [[pipelineTriples]]. */
-  private def trieOnlyTriples(spark: SparkSession, sfDir: String): DataFrame = {
-    ensureEvictionHook(spark)
-    boundedMemo(trieTriplesCache, (spark, sfDir)) {
+  /** One trie-only pipeline pass per (session, dir) (withTransformerNer =
+    * false): the "previous crawl's pipeline" side of kg_acceptance_corpus.
+    * Much cheaper than the full pipeline (no transformer inference) and
+    * read by every bench repeat of the comparison row, so it persists
+    * exactly like [[pipelineTriples]]. */
+  private def trieOnlyTriples(spark: SparkSession, sfDir: String): DataFrame =
+    CacheRegistry.memo(spark, ("trieOnlyTriples", sfDir)) {
       val pages = Pages.fromDocuments(spark, sfDir)
       val (docs, _) = Pipeline.run(spark, pages, resources(spark),
         withTransformerNer = false)
       Triples.fromDocs(spark, docs).toDF()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     }
-  }
 
   /** Scale-adaptive scan spread (optimization guide §2.2/§6 — r8). A small
     * scale factor arrives as ONE parquet split, so every narrow per-doc
@@ -463,8 +365,8 @@ object SparkEntry {
     // per-call persist (each strategy row runs its own sliced pipeline);
     // released by the bench/verify drivers via CacheRegistry once the
     // returned plan has materialized
-    val docs = graft.util.CacheRegistry.register(
-      docs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val docs = CacheRegistry.register(
+      docs0.persist(StorageLevel.MEMORY_AND_DISK))
     val lens = docsDf(s, dir).filter($"doc_id" % 5 === residue)
       .select(concat(lit("https://graft.test/doc/"), $"doc_id").as("url"),
         length($"text").as("orig_len"))
@@ -735,8 +637,8 @@ object SparkEntry {
           lit("utf-8")).as("html"),
         $"text", $"lang")
       val (docs0, _) = Pipeline.run(s, pagesWithHtml, resources(s))
-      val docs = graft.util.CacheRegistry.register(
-        docs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val docs = CacheRegistry.register(
+        docs0.persist(StorageLevel.MEMORY_AND_DISK))
       Triples.fromDocs(s, docs).toDF()
         .filter($"namespace" === "AbbreviationFinder")
         .select($"url", $"start", $"end", $"pred", $"obj",
@@ -766,8 +668,8 @@ object SparkEntry {
           lit("utf-8")).as("html"),
         $"text", $"lang")
       val (docs0, _) = Pipeline.run(s, withHtml, resources(s))
-      val docs = graft.util.CacheRegistry.register(
-        docs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val docs = CacheRegistry.register(
+        docs0.persist(StorageLevel.MEMORY_AND_DISK))
       val lens = pages0.select($"url", length($"text").as("orig_len"))
       Triples.fromDocs(s, docs).toDF()
         .join(lens, "url")
@@ -1019,22 +921,22 @@ object SparkEntry {
       // the url column name — narrower shuffle keys and cheaper hashing
       // (guide §2.3), with tp/fp/fn per class unchanged (url is never an
       // output column here)
-      val spans = graft.util.CacheRegistry.register(
+      val spans = CacheRegistry.register(
         pipelineTriples(s, dir)
           .select(substring_index($"url", "/", -1).cast("long").as("url"),
             $"start", $"end",
             regexp_replace($"pred", "^mentions_", "").as("entity_class"))
           .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(StorageLevel.MEMORY_AND_DISK))
       // gold persisted too (r8): it feeds the interval join AND the
       // set-compare union, and its derivation carries the per-doc distinct
       // shuffle — unpersisted it re-ran once per consumer
-      val gold = graft.util.CacheRegistry.register(
+      val gold = CacheRegistry.register(
         spans.filter($"entity_class" === "operator")
           .unionByName(spans.select($"url").distinct()
             .select($"url", lit(0).as("start"), lit(5).as("end"),
               lit("component").as("entity_class")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(StorageLevel.MEMORY_AND_DISK))
       graft.eval.Acceptance.nerScores(s, spans, gold, inputsDistinct = true)
     }),
     "kg_acceptance_corpus" -> ((s, dir) => {
@@ -1075,14 +977,14 @@ object SparkEntry {
       // r8: LONG doc key under the url column (bijective with the url on
       // this corpus — see kg_acceptance) so the ~8 downstream exchanges and
       // the 7-column set-compare key on a long, not a 28-char string
-      val mappings = graft.util.CacheRegistry.register(
+      val mappings = CacheRegistry.register(
         t.select(substring_index($"url", "/", -1).cast("long").as("url"),
             $"start", $"end",
             regexp_replace($"pred", "^mentions_", "").as("entity_class"),
             split($"obj", ":").getItem(0).as("source"), $"obj".as("idx"))
           .distinct()
           .join(broadcast(labels), "idx")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(StorageLevel.MEMORY_AND_DISK))
       val docId = $"url"
       val gold = mappings
         // label-ONLY perturbation: same (source, idx), renamed label — the
@@ -1122,8 +1024,8 @@ object SparkEntry {
           lit("utf-8")).as("html"),
         $"text", $"lang")
       val (docs0, _) = Pipeline.run(s, withHtml, resources(s), classRules = rules)
-      val docs = graft.util.CacheRegistry.register(
-        docs0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val docs = CacheRegistry.register(
+        docs0.persist(StorageLevel.MEMORY_AND_DISK))
       Triples.fromDocs(s, docs).toDF()
         .select($"subj", $"pred", $"obj", $"confidence", $"namespace",
           $"matchStr".as("match"), $"start", $"end", $"url")

@@ -175,7 +175,7 @@ object SkewBench {
       graft.tdp.Dedup.minhashCandidatePairs(spark, docs,
         numHashes = 64, bands = 16, shingleN = 1, maxBucket = 64).count()
     }(bounded)
-    graft.tdp.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
 
     // ---- paragraph dedup (round 5) ------------------------------------------
     results += measure(spark, "paragraph_dedup_salted") {
@@ -196,7 +196,7 @@ object SkewBench {
         .write.mode("overwrite").parquet(s"$workDir/out_substring")
       spark.read.parquet(s"$workDir/out_substring").count()
     }(bounded)
-    graft.tdp.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
     val substrNaiveCopies = math.min(1000, hotCopies)
     results += measure(spark, "substring_anchor_uncapped_naive") {
       // naive contrast at a REDUCED copy count (the full 10^5 cluster would
@@ -209,7 +209,7 @@ object SkewBench {
       if (r.maxShuffleWrite >= substrNaiveCopies.toLong * (substrNaiveCopies - 1) / 2)
         "SKEWED(single-anchor pair fanout, as expected)"
       else "naive-shape-did-not-skew(UNEXPECTED)")
-    graft.tdp.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
 
     // ---- span-level ExactSubstr (round 7) ------------------------------------
     results += measure(spark, "substring_spans_mega_key") {
@@ -221,7 +221,7 @@ object SkewBench {
         .write.mode("overwrite").parquet(s"$workDir/out_substring_spans")
       spark.read.parquet(s"$workDir/out_substring_spans").count()
     }(bounded)
-    graft.tdp.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
     results += measure(spark, "substring_spans_window_naive") {
       import org.apache.spark.sql.expressions.Window
       // naive contrast: marking duplicates with count() OVER (PARTITION BY
@@ -253,7 +253,7 @@ object SkewBench {
         .write.mode("overwrite").parquet(s"$workDir/out_c4_spans")
       spark.read.parquet(s"$workDir/out_c4_spans").count()
     }(bounded)
-    graft.tdp.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
 
     // ---- corpus×corpus acceptance (round 6) ---------------------------------
     // both span sets corpus-sized; a "hot page" url carries 10^5 spans on

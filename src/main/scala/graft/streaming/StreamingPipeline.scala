@@ -26,6 +26,14 @@ object StreamingPipeline {
   def pagesStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(pageSchema).parquet(dir)
 
+  /** Pages to pipeline docs: the full step list, run per partition. */
+  private def docs(spark: SparkSession, pages: DataFrame,
+      resources: Broadcast[Resources]): Dataset[KDoc] = {
+    import spark.implicits._
+    graft.pipeline.Pages.toDocs(spark, pages)
+      .mapPartitions(it => Pipeline.mapDocs(Pipeline.steps(resources.value))(it))
+  }
+
   /** Continuous triples: identical per-doc logic as the batch pipeline —
     * stateless, so streaming-safe. The bundle is read from its broadcast
     * inside the task, so all tasks of an executor share its indexes. */
@@ -33,12 +41,8 @@ object StreamingPipeline {
       spark: SparkSession,
       pages: DataFrame,
       resources: Broadcast[Resources]
-  ): Dataset[Triple] = {
-    import spark.implicits._
-    val docs = graft.pipeline.Pages.toDocs(spark, pages)
-      .mapPartitions(it => Pipeline.mapDocs(Pipeline.steps(resources.value))(it))
-    graft.triples.Triples.fromDocs(spark, docs)
-  }
+  ): Dataset[Triple] =
+    graft.triples.Triples.fromDocs(spark, docs(spark, pages, resources))
 
   /** Watermarked per-predicate mention rate over event-time windows. */
   def mentionRates(
@@ -54,9 +58,8 @@ object StreamingPipeline {
     // back to the page stream, whose state is UNBOUNDED unless both sides
     // are watermarked with a time-range join condition (neither held here:
     // every page and triple ever seen would be retained)
-    val docs = graft.pipeline.Pages.toDocs(spark, pages)
-      .mapPartitions(it => Pipeline.mapDocs(Pipeline.steps(resources.value))(it))
-    docs.flatMap(d => graft.triples.Triples.fromDoc(d).map(t => (t.pred, d.warcTs)))
+    docs(spark, pages, resources)
+      .flatMap(d => graft.triples.Triples.fromDoc(d).map(t => (t.pred, d.warcTs)))
       .toDF("pred", "warc_ts")
       .withWatermark("warc_ts", watermark)
       .groupBy(window($"warc_ts", window_), $"pred")

@@ -20,11 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Intermediate persists inside lazily-returned plans register with the
-    * shared [[graft.util.CacheRegistry]]; this alias keeps the dedup-local
-    * call sites and the bench/verify drivers on one name. */
-  def releaseCaches(): Unit = graft.util.CacheRegistry.releaseAll()
-
   /** Hot-key-safe join of per-row data against per-key aggregates: the
     * aggregate side is replicated over `saltBuckets` salts and the join
     * keys on (key, hash(rowId) % saltBuckets), spreading any hot key's
@@ -139,8 +134,8 @@ object Dedup {
     // 512 B/doc. Lifecycle: Dataset.persist registers in CacheManager,
     // which holds the entry until an explicit unpersist() or session end
     // (ContextCleaner only reclaims RDD-level caches) — so long-lived
-    // callers must call [[releaseCaches]] once the returned plan has been
-    // materialized; the bench/verify drivers do.
+    // callers must call `CacheRegistry.releaseAll()` once the returned plan
+    // has been materialized; the bench/verify drivers do.
     val sigs = docs
       .select($"doc_id", $"text")
       .as[(Long, String)]

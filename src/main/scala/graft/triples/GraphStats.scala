@@ -99,11 +99,15 @@ object GraphStats {
       // across the cluster's parallelism (cluster-derived, not a constant)
       // costs one narrow doc-count-sized shuffle and lets the quadratic
       // Generate+partial-pair-agg stage run at full width at every scale.
+      // The width is read when the plan is built; under dynamic allocation
+      // defaultParallelism can still be 2 before executors register, so
+      // the shuffle-partition setting is its floor.
       // Round-robin, not hash-by-url: a url-hash request matches the url
       // exchange above it and Catalyst elides it as redundant — AQE then
       // re-collapses the read at runtime. (The pre-repartition local sort is
       // over one capped row per doc — negligible.)
-      .repartition(spark.sparkContext.defaultParallelism)
+      .repartition(math.max(spark.sparkContext.defaultParallelism,
+        spark.conf.get("spark.sql.shuffle.partitions").toInt))
       // unordered pairs with obj_a < obj_b in UTF8 order — the same binary
       // string comparison the round-7 join filter used
       .select(explode(expr(

@@ -13,7 +13,7 @@ object BenchSubset {
       names.split(",").foreach { n =>
         val t0 = System.nanoTime()
         val cnt = SparkEntry.queries(n)(spark, sfDir).count()
-        graft.tdp.Dedup.releaseCaches()
+        graft.util.CacheRegistry.releaseAll()
         println(f"TIMING rep=$r $n%-24s ${(System.nanoTime()-t0)/1e9}%7.2f s  rows=$cnt")
       }
     }

@@ -65,7 +65,7 @@ class C4Spec extends AnyFunSuite with SparkTestBase {
     val out = C4.threeSentenceDedup(spark, docs)
       .as[(Long, Long, Long, Long, Long, String)].collect()
       .map(r => r._1 -> r).toMap
-    graft.tdp.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
     def md5(s: String) = graft.tdp.SubstringSpans.md5Hex(s)
     // doc 0 keeps everything (canonical occurrence of the span)
     assert(out(0L)._5 == 0 && out(0L)._6 == md5(s"$span tail zero."))
@@ -111,7 +111,7 @@ class C4Spec extends AnyFunSuite with SparkTestBase {
       val got = C4.threeSentenceDedup(spark, docs.toDF("doc_id", "text"))
         .as[(Long, Long, Long, Long, Long, String)].collect()
         .map(x => x._1 -> ((x._2, x._3, x._4, x._5, x._6))).toMap
-      graft.tdp.Dedup.releaseCaches()
+      graft.util.CacheRegistry.releaseAll()
       assert(got == want, s"seed $seed")
     }
   }
@@ -125,7 +125,7 @@ class C4Spec extends AnyFunSuite with SparkTestBase {
       .toDF("doc_id", "text")
     val out = C4.threeSentenceDedup(spark, docs)
       .as[(Long, Long, Long, Long, Long, String)].collect()
-    graft.tdp.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
     val removedDocs = out.filter(_._5 > 0).map(_._1).toSet
     // every even doc except the canonical doc 0 lost the banner sentences
     assert(removedDocs == (2L until 40L by 2).toSet)

@@ -42,7 +42,7 @@ class LmFilterSpec extends AnyFunSuite with SparkTestBase {
     val got = LmFilter.surprisal(spark, docs.toDF("doc_id", "text"), thr)
       .as[(Long, Long, Long, Long, Boolean)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
-    graft.tdp.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
     assert(got == naive(docs, thr))
     assert((0L until 16L).forall(got(_)._4), "common pages must keep")
     assert((16L until 20L).forall(!got(_)._4), "singleton-word pages must drop")
@@ -60,7 +60,7 @@ class LmFilterSpec extends AnyFunSuite with SparkTestBase {
           docs.toDF("doc_id", "text").repartition(1 + r.nextInt(7)), 505L)
         .as[(Long, Long, Long, Long, Boolean)].collect()
         .map(x => x._1 -> ((x._2, x._3, x._4, x._5))).toMap
-      graft.tdp.Dedup.releaseCaches()
+      graft.util.CacheRegistry.releaseAll()
       assert(got == naive(docs, 505L), s"seed $seed")
     }
   }

@@ -26,7 +26,7 @@ class MixtureSpec extends AnyFunSuite with SparkTestBase {
     val out = Mixture.temperatureMix(spark, docs, budget = 420L)
       .as[(String, Long, Long, Long, Long, Long)].collect()
       .map(r => r._1 -> r).toMap
-    graft.tdp.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
     // weights: 30/42, 10/42, 2/42 in ppm (exact integer division)
     assert(out("aa")._3 == 1000000L * 30 / 42)
     assert(out("bb")._3 == 1000000L * 10 / 42)
@@ -47,10 +47,10 @@ class MixtureSpec extends AnyFunSuite with SparkTestBase {
     val docs = (0L until 500L).map(i => (i, if (i % 7 == 0) "x" else "y"))
     val a = Mixture.temperatureMix(spark, docs.toDF("doc_id", "lang").repartition(3))
       .collect().toSeq
-    graft.tdp.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
     val b = Mixture.temperatureMix(spark, docs.toDF("doc_id", "lang").repartition(11))
       .collect().toSeq
-    graft.tdp.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
     assert(a == b)
   }
 }

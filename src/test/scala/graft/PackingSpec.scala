@@ -29,7 +29,7 @@ class PackingSpec extends AnyFunSuite with SparkTestBase {
     val out = Packing.packSequences(spark,
         docs.toDF("doc_id", "text").repartition(parts), capacity = c)
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    graft.tdp.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
     out
   }
 

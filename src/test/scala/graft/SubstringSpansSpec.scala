@@ -50,7 +50,7 @@ class SubstringSpansSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val out = SubstringSpans.duplicateSpans(spark, docs.toDF("doc_id", "text"))
       .as[(Long, Long, Long, Long, String)].collect()
-    graft.tdp.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
     out.map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
   }
 

@@ -600,7 +600,7 @@ class DedupSubstringSpec extends AnyFunSuite with SparkTestBase {
     val docs = Seq((0L, a), (1L, b), (2L, c)).toDF("doc_id", "text")
     val out = graft.tdp.DedupSubstring.substringPairs(spark, docs)
       .as[(Long, Long, Long)].collect().toSeq
-    graft.tdp.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
     assert(out.map(p => (p._1, p._2)) == Seq((0L, 1L)))
     assert(out.head._3 >= 2, s"shared anchors ${out.head._3}")
   }
@@ -615,7 +615,7 @@ class DedupSubstringSpec extends AnyFunSuite with SparkTestBase {
     val docs = (10 until 40).map(i => (i.toLong, s"prefix$i $boiler suffix$i"))
       .toDF("doc_id", "text")
     val out = graft.tdp.DedupSubstring.substringPairs(spark, docs).collect()
-    graft.tdp.Dedup.releaseCaches()
+    graft.util.CacheRegistry.releaseAll()
     assert(out.isEmpty, s"${out.length} pairs")
   }
 }
