@@ -1,10 +1,11 @@
 package graft.index
 
-/** Serializable Aho-Corasick automaton over chars, frozen into CSR-style
-  * primitive arrays so a single broadcast ships compactly to every executor
-  * (the Spark analogue of the reference's pickled `ahocorasick.Automaton`,
-  * kazu/steps/joint_ner_and_linking/memory_efficient_string_matching.py:42-94;
-  * same memory-first motivation as CHANGELOG.md:224).
+/** Aho-Corasick automaton over chars, frozen into CSR-style primitive
+  * arrays. It stands in for the reference's pickled `ahocorasick.Automaton`
+  * (kazu/steps/joint_ner_and_linking/memory_efficient_string_matching.py:42-94;
+  * same memory-first motivation as CHANGELOG.md:224), but is not shipped:
+  * each JVM that scans builds the arrays once from the broadcast bundle's
+  * keys ([[Resources.trie]]), so a job that never scans never holds them.
   *
   * Matching emits (inclusiveEndOffset, keyIndex) for EVERY key occurrence,
   * overlapping included — overlap resolution is a later pipeline stage, as in
@@ -16,8 +17,8 @@ package graft.index
   * order, first reach them (the root is 0). Node `u`'s outgoing edges sit at
   * `[nodeEdgeStart(u), nodeEdgeStart(u + 1))` of `edgeChar`/`edgeDest`,
   * ascending by char, so a transition is a binary search in one short run.
-  * Seven arrays in all, whatever the number of keys: Spark's size estimate
-  * and Java serialization see a handful of objects, not one per node.
+  * Seven arrays in all, whatever the number of keys: the heap holds a
+  * handful of objects, not one per node.
   */
 final class AhoCorasick private[index] (
     val keys: Array[String],

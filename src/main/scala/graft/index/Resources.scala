@@ -9,7 +9,8 @@ import graft.ontology._
   * process-global in-memory DBs + pickled automaton
   * (kazu/database/in_memory_db.py:23-149,
   * memory_efficient_string_matching.py:42-94), frozen into one serializable
-  * value that the driver builds once and ships as a single Spark broadcast.
+  * value that the driver builds once and ships as a single Spark broadcast
+  * (of the automaton, only its keys: each JVM that scans builds it).
   * Executors share it across all tasks — the Spark analogue of the
   * reference's per-Ray-worker model-pack copy, amortized per JVM instead of
   * per worker (SURVEY.md §4).
@@ -36,20 +37,26 @@ import graft.ontology._
   * every executor JVM — all linear in the number of objects. As maps of case
   * classes, 30,000 synonyms were about 400,000 objects; as columns they are
   * a few dozen arrays (the size estimate samples long arrays), and the heap
-  * loses the per-row object, tuple-key and collection headers.
+  * loses the per-row object, tuple-key and collection headers. The
+  * broadcast carries the trie keys, not the automaton over them: at 30,000
+  * synonyms the automaton's arrays were more than half the serialized bytes,
+  * and only the trie-NER step scans with them.
   * `candidateAt` still hands out a shared [[LinkingCandidate]], built on
   * first use per row per JVM into a transient slot array.
   *
-  * Derived state (fuzzy indexes, mapping vectorizers, token matchers,
-  * synonym embeddings) lives and dies with the bundle instance, built once
-  * per instance through [[derived]]. Ship the bundle to tasks only by
+  * Derived state (the Aho-Corasick automaton over the trie keys, fuzzy
+  * indexes, mapping vectorizers, token matchers, synonym embeddings) lives
+  * and dies with the bundle instance, built once per instance through
+  * [[derived]], where it is first used: a job that never scans text never
+  * builds the automaton. Ship the bundle to tasks only by
   * broadcast, read by `bc.value` inside the task: an executor's tasks then
   * share one instance, while a closure-captured bundle is a fresh copy per
   * task that refits everything. `version` is only a label for lineage and
   * equality; nothing is keyed by it.
   */
 final class Resources private (
-    val trie: AhoCorasick,
+    /** The distinct lower-cased trie keys, ascending: key `k` of [[trie]]. */
+    private[graft] val trieKeys: Array[String],
     private val strings: Array[String],
     private val keyPayloadStart: Array[Int],
     private val payClass: Array[Int],
@@ -143,6 +150,9 @@ final class Resources private (
   def candidateRow(parser: String, synNorm: String): Int =
     probe(candIndex, candParser, candSynNorm, strings, parser, synNorm)
 
+  /** The automaton over [[trieKeys]], built on first use per instance. */
+  def trie: AhoCorasick = derived(AhoCorasick)(AhoCorasick.build(trieKeys))
+
   @transient private lazy val slots = new AtomicReferenceArray[LinkingCandidate](candidateCount)
 
   @transient private lazy val memo = new java.util.concurrent.ConcurrentHashMap[AnyRef, AnyRef]()
@@ -152,6 +162,9 @@ final class Resources private (
     * forbids recursive updates. */
   private[graft] def derived[T <: AnyRef](key: AnyRef)(build: => T): T =
     memo.computeIfAbsent(key, _ => build).asInstanceOf[T]
+
+  /** Whether this instance has built the state `key` names. */
+  private[graft] def hasDerived(key: AnyRef): Boolean = memo.containsKey(key)
 
   /** Candidate row c as a shared value, built on its first use in this JVM. */
   def candidateAt(c: Int): LinkingCandidate = {
@@ -213,7 +226,7 @@ final class Resources private (
   private def slice(from: Int, until: Int, values: Array[Int]): Seq[String] =
     ArraySeq.unsafeWrapArray(Array.tabulate(until - from)(i => strings(values(from + i))))
 
-  private def columns: Seq[AnyRef] = Seq(trie.keys, strings,
+  private def columns: Seq[AnyRef] = Seq(trieKeys, strings,
     keyPayloadStart, payClass, payConfidence, payCaseSensitive, paySynNorm,
     payOriginalCase, payParserStart, payParser, payCandidate,
     candParser, candSynNorm, candSymbolic, candAggregatedBy, candRawStart,
@@ -375,7 +388,7 @@ object Resources {
     }
     val strings = pool.strings
     new Resources(
-      AhoCorasick.build(keys),
+      keys,
       strings,
       keyPayloadStart.result(), payClass.result(), payConfidence.result(),
       payCaseSensitive.result(), paySynNorm.result(), payOriginalCase.result(),

@@ -4,9 +4,10 @@ import graft.model._
 import graft.index.Resources
 import graft.text.{Normalizer, Tokenizer}
 
-/** Dictionary NER + exact-match pre-linking over the broadcast gazetteer
-  * trie — the default first stage, re-expressing the reference's
-  * MemoryEfficientStringMatchingStep scan semantics
+/** Dictionary NER + exact-match pre-linking over the gazetteer trie (built
+  * once per JVM from the broadcast bundle's keys) — the default first
+  * stage, re-expressing the reference's MemoryEfficientStringMatchingStep
+  * scan semantics
   * (kazu/steps/joint_ner_and_linking/memory_efficient_string_matching.py:96-185)
   * as a document-local pure function. No shuffle: the stage is a narrow map.
   */
@@ -21,8 +22,9 @@ object TrieNer {
     val matchable = text.toLowerCase(java.util.Locale.ROOT)
     val (starts, ends) = Tokenizer.boundaries(text)
     val out = scala.collection.mutable.ArrayBuffer.empty[Mention]
-    res.trie.scan(matchable, (endIdx, keyIdx) => {
-      val key = res.trie.keys(keyIdx)
+    val trie = res.trie // one derived-memo lookup per call, not per match
+    trie.scan(matchable, (endIdx, keyIdx) => {
+      val key = trie.keys(keyIdx)
       val startIdx = endIdx - key.length + 1
       if (Tokenizer.wordIsValid(startIdx, endIdx, starts, ends)) {
         val matchedText = text.substring(startIdx, endIdx + 1)

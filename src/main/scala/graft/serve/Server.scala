@@ -243,6 +243,7 @@ object Server {
   /** Start the server; port 0 picks an ephemeral port (tests). */
   def start(resources: Resources, port: Int): HttpServer = {
     val service = new Service(resources)
+    resources.trie // build the automaton now, not in the first request
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/api/kazu/ner_and_linking",
       handler(service, service.nerAndLinking, parseText(service)))

@@ -9,8 +9,11 @@ import java.util.regex.Pattern
   * output (SURVEY.md §7.4 risk 1).
   *
   * Pure functions — usable inside typed maps, `mapPartitions`, and as UDFs.
-  * No caching needed: Spark amortizes via the group-by-distinct-mention
-  * pattern before linking (SURVEY.md D1).
+  * Nothing is cached. Linking needs no cache: Spark amortizes via the
+  * group-by-distinct-mention pattern before linking (SURVEY.md D1). NER
+  * does not amortize: TrieNer and TokenClassifier normalize every mention
+  * they emit, tens of thousands per thousand documents, so a surface string
+  * is normalized again at each of its occurrences.
   */
 object Normalizer {
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.index.{Resources, ResourcesReference}
+import graft.index.{AhoCorasick, Resources, ResourcesReference}
 import graft.ontology.{CorpusOntology, OntologyRow}
 
 /** Resource-bundle set-up cost against ontology size S.
@@ -11,7 +11,13 @@ import graft.ontology.{CorpusOntology, OntologyRow}
   * reports for each the build time, Spark's `SizeEstimator` (the walk a
   * broadcast pays before it serializes) time and bytes, and Java
   * serialization and deserialization time and bytes — the set-up work of a
-  * broadcast on the driver and in every executor JVM.
+  * broadcast on the driver and in every executor JVM. Two more rows price
+  * the automaton the columnar bundle no longer carries: `automaton` is
+  * `AhoCorasick.build` over the bundle's keys (the build each JVM that scans
+  * pays) and the automaton's own Java bytes and deserialize time, keys
+  * included (so at most what a JVM no longer pays to receive the arrays);
+  * `columnar + automaton` is the bundle as it was shipped with the
+  * automaton in it (keys written once).
   *
   *   SPARK_DRIVER_MEM=6g sbt "Test/runMain graft.ResourcesScaleProbe"
   *
@@ -70,14 +76,17 @@ object ResourcesScaleProbe {
     (times.min, out)
   }
 
-  private def report(label: String, n: Int, build: => AnyRef): Unit = {
+  /** One row of the table; `build` is timed only when `timed`. */
+  private def report[T <: AnyRef](label: String, n: Int, build: => T, timed: Boolean = true): T = {
     val reps = if (n >= 1000000) 1 else 3
-    val (buildMs, bundle) = ms(reps)(build)
+    val (buildMs, bundle) = if (timed) ms(reps)(build) else (Double.NaN, build)
     val (estMs, est) = ms(reps)(org.apache.spark.util.SizeEstimator.estimate(bundle))
     val (serMs, bytes) = ms(reps)(serialize(bundle))
     val (deserMs, _) = ms(reps)(deserialize[AnyRef](bytes))
-    println(f"| $n%,d | $label | $buildMs%.0f | $estMs%.0f | ${est / 1e6}%.1f | " +
-      f"$serMs%.0f | ${bytes.length / 1e6}%.1f | $deserMs%.0f |")
+    val built = if (timed) f"$buildMs%.0f" else "—"
+    println(f"| $n%,d | $label | $built | $estMs%.0f | ${est / 1e6}%.1f | " +
+      f"$serMs%.0f | ${bytes.length / 1e6}%.2f | $deserMs%.0f |")
+    bundle
   }
 
   def main(args: Array[String]): Unit = {
@@ -92,7 +101,9 @@ object ResourcesScaleProbe {
       def build[T](f: (Seq[OntologyRow], String => String, Set[String], String) => T): T =
         f(all, CorpusOntology.entityClassOf, CorpusOntology.CommonWords, s"probe/$n")
       report("reference (maps)", n, build(ResourcesReference.build))
-      report("columnar", n, build(Resources.build))
+      val res = report("columnar", n, build(Resources.build))
+      val trie = report("automaton", n, AhoCorasick.build(res.trieKeys))
+      report("columnar + automaton", n, Array[AnyRef](res, trie), timed = false)
     }
   }
 }
