@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler._
+import graft.util.TaskMetrics
 import org.apache.spark.sql.SparkSession
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Round-8 optimization harness (guide §1.4/§1.5): NOT part of the frozen
   * driver contract ([[Bench]] is untouched). For each selected query this
@@ -15,70 +14,15 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   *    guide §1.4) — a large count-vs-noop gap means the count path is
   *    pruning work the real query does;
   *  - counts Spark jobs / stages / tasks and sums task time + shuffle
-  *    read/write bytes per timed run via a listener, so "where does the
-  *    time go" is measured, not guessed (§1.1 empirical loop).
+  *    read/write bytes per timed run from [[graft.util.TaskMetrics]], so
+  *    "where does the time go" is measured, not guessed (§1.1 empirical
+  *    loop).
   *
   * Usage: sbt "runMain graft.BenchExtra <tag> [query ...]"
   *   (env SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as the bench; no queries ⇒
   *    all of SparkEntry.queries.)
   */
 object BenchExtra {
-
-  private final class Acc extends SparkListener {
-    val jobs = new AtomicInteger(0)
-    val stages = new AtomicInteger(0)
-    val tasks = new AtomicInteger(0)
-    val taskTimeMs = new AtomicLong(0L)
-    val shuffleRead = new AtomicLong(0L)
-    val shuffleWrite = new AtomicLong(0L)
-    val gcMs = new AtomicLong(0L)
-    /** (stage name, task time ms, n tasks, wall ms) per completed stage. */
-    val stageRows = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Int, Long)]()
-    override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      stages.incrementAndGet()
-      val info = s.stageInfo
-      val tt = Option(info.taskMetrics).map(_.executorRunTime).getOrElse(0L)
-      val wall = (for {a <- info.completionTime; b <- info.submissionTime} yield a - b).getOrElse(0L)
-      // first graft.* frame of the submission stack — the anonymous AQE
-      // stage-materialization name alone cannot tell scoring passes apart
-      val frame = info.details.linesIterator
-        .find(l => l.contains("graft.") && !l.contains("BenchExtra"))
-        .map(_.trim.stripPrefix("at ").take(80)).getOrElse("")
-      stageRows.add((s"${info.name.takeWhile(_ != '\n').take(60)} | $frame",
-        tt, info.numTasks, wall))
-      ()
-    }
-    val deserMs = new AtomicLong(0L)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      tasks.incrementAndGet()
-      val m = t.taskMetrics
-      if (m != null) {
-        taskTimeMs.addAndGet(m.executorRunTime)
-        gcMs.addAndGet(m.jvmGCTime)
-        deserMs.addAndGet(m.executorDeserializeTime)
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    def snapshot: String =
-      f"jobs=${jobs.get}%d stages=${stages.get}%d tasks=${tasks.get}%d " +
-        f"taskTime=${taskTimeMs.get / 1000.0}%.2fs deser=${deserMs.get / 1000.0}%.2fs gc=${gcMs.get / 1000.0}%.2fs " +
-        f"shufRead=${shuffleRead.get / 1024.0 / 1024.0}%.2fMB " +
-        f"shufWrite=${shuffleWrite.get / 1024.0 / 1024.0}%.2fMB"
-    def topStages(n: Int): String = {
-      import scala.jdk.CollectionConverters._
-      stageRows.asScala.toSeq.sortBy(-_._2).take(n)
-        .map { case (nm, tt, nt, wall) =>
-          f"    ${tt / 1000.0}%6.2fs task / ${wall / 1000.0}%5.2fs wall / $nt%3d tasks  $nm"
-        }.mkString("\n")
-    }
-    def reset(): Unit = {
-      jobs.set(0); stages.set(0); tasks.set(0); taskTimeMs.set(0L)
-      shuffleRead.set(0L); shuffleWrite.set(0L); gcMs.set(0L); deserMs.set(0L)
-      stageRows.clear()
-    }
-  }
 
   /** Poor-man's sampling profiler (local mode only: executors share this
     * JVM): every ~20 ms, take the topmost interesting frame of every
@@ -150,8 +94,7 @@ object BenchExtra {
 
     val plansOnly = sys.env.get("SPARK_GRAFT_PLANS_ONLY").contains("1")
     SparkEntry.materializeShared(spark, sfDir)
-    val acc = new Acc
-    spark.sparkContext.addSparkListener(acc)
+    val metrics = TaskMetrics.attach(spark.sparkContext)
     val sampler = new Sampler
     val sampling = sys.env.get("SPARK_GRAFT_SAMPLE").contains("1")
     if (sampling) sampler.start()
@@ -168,13 +111,24 @@ object BenchExtra {
       if (plansOnly) { println(s"PLAN $name"); }
       else {
       def timed(action: org.apache.spark.sql.DataFrame => Unit): (Double, String, String) = {
-        acc.reset()
+        metrics.reset()
         val t0 = System.nanoTime()
         spark.sparkContext.setJobDescription(s"$name")
         action(fn(spark, sfDir))
         val sec = (System.nanoTime() - t0) / 1e9
         graft.util.CacheRegistry.releaseAll()
-        (sec, acc.snapshot, acc.topStages(6))
+        // sums over every task; top stages named by their first graft frame outside this main
+        val ts = metrics.tasks
+        def secs(f: TaskMetrics.TaskRow => Long) = ts.map(f).sum / 1000.0
+        def mb(f: TaskMetrics.TaskRow => Long) = ts.map(f).sum / 1024.0 / 1024.0
+        val profile = f"jobs=${metrics.jobs}%d stages=${metrics.stages.size}%d tasks=${ts.size}%d " +
+          f"taskTime=${secs(_.runMs)}%.2fs deser=${secs(_.deserializeMs)}%.2fs gc=${secs(_.gcMs)}%.2fs " +
+          f"shufRead=${mb(_.shuffleReadBytes)}%.2fMB shufWrite=${mb(_.shuffleWriteBytes)}%.2fMB"
+        val top = metrics.stages.sortBy(-_.taskMs).take(6).map { s =>
+          val frame = s.graftFrames.find(!_.contains("BenchExtra")).map(_.take(80)).getOrElse("")
+          f"    ${s.taskMs / 1000.0}%6.2fs task / ${s.wallMs / 1000.0}%5.2fs wall / ${s.tasks}%3d tasks  ${s.name.take(60)} | $frame"
+        }.mkString("\n")
+        (sec, profile, top)
       }
       // median of three unprofiled count runs; with sampling on, one more
       // run carries the profiler (its safepoint pauses stay out of the median)

@@ -1,5 +1,6 @@
 package graft.bench
 
+import graft.util.TaskMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -45,24 +46,19 @@ object SkewBench {
     * count, payload-bytes concentration, single-task pair fanout). */
   private def measure(spark: SparkSession, name: String)(
       body: => Long)(verdictFn: Result => String): Result = {
-    val ts = new TaskSpread
-    spark.sparkContext.addSparkListener(ts)
+    val metrics = TaskMetrics.attach(spark.sparkContext)
     val t0 = System.nanoTime()
     val rows = body
     val wall = (System.nanoTime() - t0) / 1e9
-    // task-end events arrive asynchronously; give the bus a moment
-    Thread.sleep(300)
-    spark.sparkContext.removeSparkListener(ts)
-    val spreads = ts.stageSpreads(minTasks = 2)
+    val spreads = try metrics.stageSpreads(minTasks = 2) finally metrics.close()
     val ratio = if (spreads.isEmpty) 1.0 else spreads.map(_.readRatio()).max
     val bratio = if (spreads.isEmpty) 1.0 else spreads.map(_.readBytesRatio()).max
-    val busiest = spreads.sortBy(-_.maxTimeMs).headOption
+    val busiest = spreads.sortBy(-_.max(_.runMs)).headOption
+    def worst(f: TaskMetrics.TaskRow => Long) = spreads.map(_.max(f)).maxOption.getOrElse(0L)
     val r0 = Result(name, wall, rows, ratio, bratio,
-      spreads.map(_.maxShuffleReadRecords).maxOption.getOrElse(0L),
-      spreads.map(_.maxShuffleWriteRecords).maxOption.getOrElse(0L),
-      spreads.map(_.maxShuffleReadBytes).maxOption.getOrElse(0L),
-      busiest.map(_.maxTimeMs).getOrElse(0L),
-      busiest.map(_.medianTimeMs).getOrElse(0L),
+      worst(_.shuffleReadRecords), worst(_.shuffleWriteRecords), worst(_.shuffleReadBytes),
+      busiest.map(_.max(_.runMs)).getOrElse(0L),
+      busiest.map(_.median(_.runMs)).getOrElse(0L),
       "")
     val r = r0.copy(verdict = verdictFn(r0))
     println(f"""{"query":"${r.name}","wall_sec":${r.wallSec}%.2f,"rows":${r.rows},"worst_read_ratio":${r.worstReadRatio}%.2f,"worst_read_bytes_ratio":${r.worstReadBytesRatio}%.2f,"max_shuffle_read":${r.maxShuffleRead},"max_shuffle_write":${r.maxShuffleWrite},"max_shuffle_read_bytes":${r.maxShuffleReadBytes},"max_task_ms":${r.maxTaskMs},"median_task_ms":${r.medianTaskMs},"verdict":"${r.verdict}"}""")

@@ -205,9 +205,12 @@ object Pipeline {
   /** Open every step and chain them under the one failure-isolation
     * contract: a doc that already failed passes through unchanged, and a
     * non-fatal exception becomes the doc's error, prefixed with the step's
-    * name — one bad page never kills a task. */
+    * name — one bad page never kills a task. A step that fails to open
+    * throws its exception for every doc that reaches it, so each becomes a
+    * failure row of that step instead of a task abort. */
   def compose(steps: Seq[Step]): KDoc => KDoc = {
-    val opened = steps.map(s => (s.name, s.open()))
+    val opened = steps.map(s =>
+      (s.name, try s.open() catch { case NonFatal(e) => (_: KDoc) => throw e }))
     doc => opened.foldLeft(doc) { case (d, (name, f)) =>
       if (d.error.isDefined) d
       else

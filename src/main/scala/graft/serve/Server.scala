@@ -25,9 +25,12 @@ import scala.jdk.CollectionConverters._
   *   - POST /api/kazu/batch             [{"text": "..."}, ...] (array
   *     required; responds with an array)
   *
-  * Responses are the canonical document JSON (url, sections, entities with
-  * spans/confidence/mappings) — the same structural schema the batch JSON
-  * sink writes.
+  * Responses are the reference's snake_case document JSON ([[docToJsonNode]]:
+  * `idx`, entities with `match`, `entity_class`, `mention_confidence` by name
+  * and flattened candidates; no `warcTs` or `sentenceSpans`), not the KDoc
+  * encoder's camelCase schema the batch sink (`pipeline.Json`) writes: a
+  * `ner_only` response feeds the `linking_only` route here, not
+  * `pipeline.Main --step-group linking_only`.
   */
 object Server {
 

@@ -577,6 +577,26 @@ class StepIsolationSpec extends AnyFunSuite with SparkTestBase {
         where)
     }
   }
+
+  test("a step whose open throws fails every doc at that step, fused and checkpointed") {
+    val res = spark.sparkContext.broadcast(Resources.corpus)
+    val pages = Pages.fromDocuments(spark, "/root/testdata/sf0.001")
+      .filter(expr("cast(regexp_extract(url, '([0-9]+)$', 1) as long) < 8"))
+    val (clean, _) = Pipeline.runSteps(spark, pages, res, Pipeline.Config())(allSteps)
+    val urls = clean.collect().map(_.url).sorted.toSeq
+    assert(urls.nonEmpty)
+    for (name <- allSteps(Resources.corpus).map(_.name); checkpointed <- Seq(false, true)) {
+      val cfg =
+        if (!checkpointed) Pipeline.Config()
+        else Pipeline.Config(checkpointDir = Some(
+          s"file:${java.nio.file.Files.createTempDirectory("graft-iso-open")}"))
+      val (docs, _) = Pipeline.runSteps(spark, pages, res, cfg)(openThrowingAt(name))
+      val fails = Pipeline.failures(spark, docs, "iso-open").collect()
+      val where = s"$name, checkpointed=$checkpointed"
+      assert(fails.map(_.url).sorted.toSeq == urls, where)
+      assert(fails.forall(f => f.stage == name && f.error.contains(Planted)), where)
+    }
+  }
 }
 
 object StepIsolationSpec {
@@ -595,5 +615,11 @@ object StepIsolationSpec {
         val f = s.open()
         d => if (d.url == victim) throw new IllegalStateException(Planted) else f(d)
       })
+    }
+
+  def openThrowingAt(name: String): Resources => Seq[Pipeline.Step] = r =>
+    allSteps(r).map { s =>
+      if (s.name != name) s
+      else Pipeline.Step(name, () => throw new IllegalStateException(Planted))
     }
 }

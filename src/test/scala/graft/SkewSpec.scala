@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.bench.TaskSpread
+import graft.util.TaskMetrics
 
 /** Skew stress assertions (round-4 directive #1): the salted / capped /
   * join-back plans must keep a bounded per-task row spread on a corpus
@@ -28,12 +28,12 @@ class SkewSpec extends AnyFunSuite with SparkTestBase {
           ($"id" * 31 % 977).cast("string"))).as("text"))
   }
 
-  /** Run `action`, drain the async listener bus, read spread stats. */
-  private def measureSpread[A](action: => Unit)(read: TaskSpread => A): A = {
-    val ts = new TaskSpread
-    spark.sparkContext.addSparkListener(ts)
-    try { action; Thread.sleep(600); read(ts) }
-    finally spark.sparkContext.removeSparkListener(ts)
+  /** Run `action`, then read spread stats over its tasks (every read of
+    * [[TaskMetrics]] drains the listener bus first). */
+  private def measureSpread[A](action: => Unit)(read: TaskMetrics => A): A = {
+    val metrics = TaskMetrics.attach(spark.sparkContext)
+    try { action; read(metrics) }
+    finally metrics.close()
   }
 
   private def withConf[A](kv: (String, String)*)(body: => A): A = {
@@ -70,7 +70,7 @@ class SkewSpec extends AnyFunSuite with SparkTestBase {
       hashed.withColumn("n_same_text",
           count(lit(1)).over(Window.partitionBy($"text_md5")))
         .agg(sum($"n_same_text")).collect()
-    }(_.stageSpreads(minTasks = 1).map(_.maxShuffleReadRecords).maxOption.getOrElse(0L))
+    }(_.stageSpreads(minTasks = 1).map(_.max(_.shuffleReadRecords)).maxOption.getOrElse(0L))
     assert(windowMax >= HotCopies,
       s"expected the Window reducer to read the whole $HotCopies-row cluster, saw $windowMax")
   }
@@ -106,7 +106,7 @@ class SkewSpec extends AnyFunSuite with SparkTestBase {
         // write): a same-stage downstream aggregate would make AQE's
         // requirement validation conservatively skip the skew split
         hashed.join(counts, "text_md5").collect()
-      }(_.stageSpreads(minTasks = 1).map(_.maxShuffleReadRecords).maxOption.getOrElse(0L))
+      }(_.stageSpreads(minTasks = 1).map(_.max(_.shuffleReadRecords)).maxOption.getOrElse(0L))
     }
     assert(maxRead < HotCopies,
       s"hot join partition was not split: one task read $maxRead rows (cluster = $HotCopies)")
@@ -126,7 +126,7 @@ class SkewSpec extends AnyFunSuite with SparkTestBase {
 
     val cappedMaxWrite = measureSpread {
       graft.triples.GraphStats.cooccurrenceEdges(spark, triples, maxObjsPerDoc = 64).count()
-    }(_.stageSpreads(minTasks = 1).map(_.maxShuffleWriteRecords).maxOption.getOrElse(0L))
+    }(_.stageSpreads(minTasks = 1).map(_.max(_.shuffleWriteRecords)).maxOption.getOrElse(0L))
     // 64 objs → ≤ 2016 pairs from any single document, plus normal traffic
     assert(cappedMaxWrite <= 64L * 63 / 2 + 3000,
       s"capped plan wrote $cappedMaxWrite records from one task")
@@ -137,7 +137,7 @@ class SkewSpec extends AnyFunSuite with SparkTestBase {
       val a = perDoc.toDF("url", "obj_a"); val b = perDoc.toDF("url", "obj_b")
       a.join(b, Seq("url")).filter($"obj_a" < $"obj_b")
         .groupBy($"obj_a", $"obj_b").agg(count(lit(1)).as("n_docs")).count()
-    }(_.stageSpreads(minTasks = 1).map(_.maxShuffleWriteRecords).maxOption.getOrElse(0L))
+    }(_.stageSpreads(minTasks = 1).map(_.max(_.shuffleWriteRecords)).maxOption.getOrElse(0L))
     assert(uncappedMaxWrite >= 300L * 299 / 2,
       s"expected the uncapped directory-page task to write ≥ ${300 * 299 / 2} pairs, saw $uncappedMaxWrite")
   }

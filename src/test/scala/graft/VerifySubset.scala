@@ -17,38 +17,10 @@ object VerifySubset {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val memSpilled = new java.util.concurrent.atomic.AtomicLong(0)
-    val diskSpilled = new java.util.concurrent.atomic.AtomicLong(0)
-    val peakExec = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          memSpilled.addAndGet(m.memoryBytesSpilled)
-          diskSpilled.addAndGet(m.diskBytesSpilled)
-          peakExec.getAndAccumulate(m.peakExecutionMemory, math.max(_, _))
-        }
-      }
-    })
-
-    // task-end events arrive on the async listener bus; poll until the
-    // counters are quiet for a full window (straggler events after a
-    // heavy query would otherwise be dropped from its row and credited
-    // to the NEXT query's reset counters)
-    def drainListener(): Unit = {
-      var prev = (memSpilled.get, diskSpilled.get, peakExec.get)
-      var waited = 0
-      var quiet = false
-      while (!quiet && waited < 10000) {
-        Thread.sleep(300); waited += 300
-        val cur = (memSpilled.get, diskSpilled.get, peakExec.get)
-        quiet = cur == prev
-        prev = cur
-      }
-    }
+    val metrics = graft.util.TaskMetrics.attach(spark.sparkContext)
 
     names.split(",").foreach { n =>
-      memSpilled.set(0); diskSpilled.set(0); peakExec.set(0)
+      metrics.reset()
       val t0 = System.nanoTime()
       val err: Option[String] =
         try { SparkEntry.queries(n)(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$n"); None }
@@ -62,11 +34,14 @@ object VerifySubset {
       // numbers aren't cross-contaminated by prior queries' caches; the
       // SHARED memoized docs/triples stay warm, as in Bench
       graft.util.CacheRegistry.releaseAll()
-      drainListener()
+      val tasks = metrics.tasks
+      val memSpilled = tasks.map(_.memorySpilledBytes).sum
+      val diskSpilled = tasks.map(_.diskSpilledBytes).sum
+      val peakExec = tasks.map(_.peakExecutionMemory).maxOption.getOrElse(0L)
       val rt = Runtime.getRuntime
       val heapUsed = rt.totalMemory() - rt.freeMemory()
       val errField = err.map(e => s""","err":${graft.util.Json.quote(e)}""").getOrElse("")
-      println(s"""{"query":"$n","wall_sec":${graft.util.Json.num(wall, 1)},"mem_spilled_mb":${memSpilled.get / 1048576},"disk_spilled_mb":${diskSpilled.get / 1048576},"peak_task_exec_mem_mb":${peakExec.get / 1048576},"jvm_heap_used_mb":${heapUsed / 1048576}$errField}""")
+      println(s"""{"query":"$n","wall_sec":${graft.util.Json.num(wall, 1)},"mem_spilled_mb":${memSpilled / 1048576},"disk_spilled_mb":${diskSpilled / 1048576},"peak_task_exec_mem_mb":${peakExec / 1048576},"jvm_heap_used_mb":${heapUsed / 1048576}$errField}""")
     }
     import graft.util.Json.{quote => q}
     val json = SparkEntry.oracleSql.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
